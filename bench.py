@@ -135,7 +135,7 @@ spark = build_session(app_name=f"cdc-bench-{{cores}}", cores=cores,
                       shuffle_partitions=max(cores * 2, 16),
                       extra_conf={{"spark.ui.enabled": "true"}})
 sink = ParquetStateSink(spark, root, n_buckets=32)
-eng = CdcEngine(spark, sink, EngineConfig(n_buckets=32, n_salt=8))
+eng = CdcEngine(spark, sink, EngineConfig(n_buckets=32))
 # warm-up epoch: JIT + python workers + committer paths (excluded, BASELINE.md)
 eng.process_batch(read_wal_batch(spark, v0[:2], "v0"), 10_000)
 groups = [(v0[2:], "v0"), (v1, "v1")]   # two large steady-state epochs

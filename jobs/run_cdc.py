@@ -201,7 +201,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = EngineConfig(
         validation_mode=args.validation,
         n_buckets=args.buckets,
-        n_salt=args.salt,
         external_variables=external_variables,
     )
     if args.sink == "iceberg":

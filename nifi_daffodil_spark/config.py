@@ -27,8 +27,6 @@ class EngineConfig:
     validation_mode: str = "full"
     max_text_len: int = 65536  # maxLength facet analog (csv.dfdl.xsd:59-62)
     n_buckets: int = 32  # target-table bucket(conv_id) partition count
-    n_salt: int = 8  # extra salt within a hot key's merge shuffle
-    infoset_format: str = "json"  # parse/unparse rendering (xml|json)
     external_variables: dict[str, str] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -37,8 +35,6 @@ class EngineConfig:
                 f"validation_mode must be one of {VALIDATION_MODES}, "
                 f"got {self.validation_mode!r}"
             )
-        if self.infoset_format not in ("json", "xml"):
-            raise ValueError(f"infoset_format must be json|xml, got {self.infoset_format!r}")
 
     def __hash__(self) -> int:  # frozen dataclass with a dict field
         return hash(
@@ -46,8 +42,6 @@ class EngineConfig:
                 self.validation_mode,
                 self.max_text_len,
                 self.n_buckets,
-                self.n_salt,
-                self.infoset_format,
                 tuple(sorted(self.external_variables.items())),
             )
         )

@@ -31,14 +31,6 @@ import os
 import time
 from dataclasses import dataclass, field
 
-_TIMING = os.environ.get("NDS_TIMING") == "1"
-
-
-def _tlog(label: str, t0: float) -> float:
-    if _TIMING:
-        print(f"[timing] {label}: {time.monotonic() - t0:.2f}s", flush=True)
-    return time.monotonic()
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -175,7 +167,6 @@ class CdcEngine:
         valid, quarantine = split_valid(validated)
         batch = self._finish_batch(valid).persist()
         try:
-            tl = time.monotonic()
             # one distributed pass: per-bucket lineage + touched + rows_in
             # + (via observe) raw/quarantine counts
             lin_rows = batch.groupBy("bucket").agg(
@@ -184,12 +175,10 @@ class CdcEngine:
                 F.count(F.lit(1)).alias("rows_in"),
                 F.sum(F.when(F.col("op") != "D", 1).otherwise(0)).alias("rows_applied"),
             ).collect()
-            tl = _tlog("lineage agg + batch cache", tl)
             touched = sorted(r["bucket"] for r in lin_rows)
             rows_in = sum(r["rows_in"] for r in lin_rows)
             metrics = obs.get  # collected by the lineage job above
             raw_events, n_quar = metrics["raw"], int(metrics["bad"] or 0)
-            tl = _tlog("observed counts", tl)
             wall_so_far = int((time.monotonic() - t0) * 1000)
             lineage_rows = [
                 (
@@ -212,10 +201,8 @@ class CdcEngine:
                 lineage_rows,
                 touched=touched,
             )
-            tl = _tlog("sink apply_batch", tl)
             if self._rollup is not None and not commit.get("skipped"):
                 self._rollup.refresh(int(epoch_id))
-                tl = _tlog("rollup refresh", tl)
             wall_ms = int((time.monotonic() - t0) * 1000)
             st = EpochStats(
                 epoch=int(epoch_id),

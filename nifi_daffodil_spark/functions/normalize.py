@@ -127,19 +127,3 @@ def make_normalize_udf(opts: NormalizeOptions = NormalizeOptions()):
 
 #: default-variable instance (the frozen golden contract)
 normalize_text_udf = make_normalize_udf()
-
-
-def render_turn_udf():
-    """Canonical per-turn rendering (the "unparse" role): a deterministic
-    single-line projection used for text-equality verification.
-
-    Kept JVM-side — built-in functions only, no Python — since it is pure
-    string concat: `conv_id \\x1f turn_idx \\x1f role \\x1f text`.
-    """
-    return F.concat_ws(
-        "\x1f",
-        F.col("conv_id"),
-        F.col("turn_idx").cast("string"),
-        F.coalesce(F.col("role"), F.lit("")),
-        F.coalesce(F.col("text"), F.lit("")),
-    )

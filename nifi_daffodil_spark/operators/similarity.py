@@ -1,16 +1,15 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers (per task directive):
-  * brute_force_topk — exact baseline; JVM-side fold for small/medium, or
-    the Arrow path (`brute_force_topk_arrow`) that does per-partition numpy
-    matmul inside mapInPandas — the shape that scales: each partition
-    multiplies its (rows x dim) block against the broadcast query matrix,
-    emits local top-k, and a single small reduce merges them.
-  * lsh_bucketed_topk — sign-random-projection LSH: vectors land in 2^n_bits
-    buckets; queries only scan their own bucket (plus optional 1-bit flips).
-    The scale path for 10^9+ vectors: candidate set per query is bucket-sized.
-
-Projection matrices are seeded numpy (deterministic) and broadcast.
+  * brute_force_topk_arrow — the exact cosine top-k: per-partition numpy
+    matmul inside mapInPandas, local top-k under the final (cos desc,
+    vec_id) order, one small global merge. IVF serving reuses it on the
+    probed cells.
+  * IVF (ivf_train_centroids / ivf_assign / ivf_topk, and the persisted
+    IvfIndex) — the ANN path: a seeded k-means coarse quantizer, vectors
+    stored by cell, and a query scans only its nprobe nearest cells.
+  * srp_lsh_pairs — all-pairs near-dup candidates via banded
+    sign-random-projection LSH over md5-derived hyperplanes (portable to
+    the DuckDB oracle), exact-cosine verified.
 """
 
 from __future__ import annotations
@@ -29,24 +28,14 @@ def as_double_vecs(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedd
     return df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v"))
 
 
-def brute_force_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
-    """Exact cosine top-k against one query vector (built-in expressions)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    qn = float(np.sqrt(np.dot(query_vec, query_vec)))
-    dot = F.aggregate(
-        F.zip_with(F.col("v"), q, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    return (
-        df.withColumn("cos", dot / (_norm_col() * F.lit(qn)))
-        .orderBy(F.col("cos").desc(), F.col("vec_id"))
-        .limit(k)
-        .select("vec_id", "cos")
-    )
-
-
 def brute_force_topk_arrow(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
-    """Arrow/numpy scale path: per-partition matmul + local top-k, then a
-    tiny global merge. ~dim*rows FLOPs vectorized, no per-row Python."""
+    """Exact cosine top-k against one query vector: per-partition numpy
+    matmul + local top-k, then a tiny global merge. ~dim*rows FLOPs
+    vectorized, no per-row Python.
+
+    Each partition selects its local top-k under the final order's own key
+    (cos desc, vec_id asc), so cosine ties at the k-th place keep the
+    smallest ids and the global merge is exact."""
     q = np.asarray(query_vec, dtype=np.float64)
     q = q / np.linalg.norm(q)
 
@@ -57,33 +46,12 @@ def brute_force_topk_arrow(df: DataFrame, query_vec: list[float], k: int = 10) -
             m = np.stack(pdf["v"].to_numpy())
             norms = np.linalg.norm(m, axis=1)
             cos = (m @ q) / np.where(norms == 0, 1.0, norms)
-            idx = np.argsort(-cos)[:k]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy()[idx], "cos": cos[idx]})
+            ids = pdf["vec_id"].to_numpy()
+            idx = np.lexsort((ids, -cos))[:k]
+            yield pd.DataFrame({"vec_id": ids[idx], "cos": cos[idx]})
 
     local = df.mapInPandas(part, schema="vec_id long, cos double")
     return local.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(k)
-
-
-def srp_bucket(df: DataFrame, dim: int, n_bits: int = 8, seed: int = 42) -> DataFrame:
-    """Assign each vector a sign-random-projection bucket (0..2^n_bits-1).
-
-    The projection is applied in a vectorized Arrow batch (numpy matmul);
-    bucket ids are plain longs afterwards, so downstream joins/groupBys are
-    pure Catalyst.
-    """
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_bits))
-
-    def part(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["v"].to_numpy())
-            signs = (m @ planes) >= 0
-            bucket = signs @ (1 << np.arange(n_bits))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "v": pdf["v"], "bucket": bucket.astype("int64")})
-
-    return df.mapInPandas(part, schema="vec_id long, v array<double>, bucket long")
 
 
 def ivf_assign(df: DataFrame, centroids: "np.ndarray") -> DataFrame:
@@ -325,10 +293,11 @@ def _srp_lsh_pairs_thresholded(
 ) -> DataFrame:
     """Threshold-pushdown SRP-LSH (see srp_lsh_pairs docstring, min_cos arm).
 
-    Stage 1 (mapInPandas): normalize + 32 sign bits + band keys, all in the
-    exact left-fold order of the Catalyst path, emitted pre-exploded as
-    (band, key, vec_id, u) rows.
-    Stage 2 (groupBy(band, key).applyInPandas): per-bucket pair generation —
+    Stage 1 (mapInArrow): normalize + sign bits + one band-key column per
+    band, all in the exact left-fold order of the Catalyst path — ONE row
+    per vector (vec_id, u, one key per band) crosses the Python boundary.
+    Stage 2 (JVM): explode the band keys into (band, key, vec_id, u) rows.
+    Stage 3 (groupBy(band, key).applyInArrow): per-bucket pair generation —
     matmul screen at min_cos - 1e-6 (admits, never drops), exact left-fold
     cosine + exact >= min_cos on screened survivors only.
     Then one distinct() over the (tiny) surviving pair set, mirroring the
@@ -453,29 +422,6 @@ def _srp_lsh_pairs_thresholded(
         bucket_pairs, schema="d1 long, d2 long, cos double"
     )
     return pairs.distinct()
-
-
-def lsh_bucketed_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_bits: int = 8,
-    seed: int = 42,
-    probe_bits: int = 1,
-) -> DataFrame:
-    """ANN: scan only the query's SRP bucket (+ multi-probe 1-bit flips)."""
-    dim = len(query_vec)
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_bits))
-    q = np.asarray(query_vec, dtype=np.float64)
-    qsigns = (q @ planes) >= 0
-    qbucket = int(qsigns @ (1 << np.arange(n_bits)))
-    probes = [qbucket]
-    if probe_bits >= 1:
-        probes += [qbucket ^ (1 << j) for j in range(n_bits)]
-    bucketed = srp_bucket(df, dim, n_bits, seed)
-    cand = bucketed.filter(F.col("bucket").isin(probes))
-    return brute_force_topk_arrow(cand.select("vec_id", "v"), query_vec, k)
 
 
 class IvfIndex:

@@ -6,7 +6,8 @@ in the hot path. md5 is used as the portable content hash (same hex in
 Spark, DuckDB, Python hashlib).
 
 Scale notes:
-  * exact_dedup: one hash-shuffle on the 32-hex digest, map-side partial agg.
+  * exact dedup (dedup_corpus method='exact'): one hash-shuffle on the
+    32-hex digest, keeper = min id per digest window, no pair emission.
   * shingles: explode multiplies rows by ~doc_len; keep shingle length >= 3
     so the distinct() dedup per doc happens map-side first.
   * minhash_lsh_pairs: the candidate join shuffles (band, minhash) keys —
@@ -14,8 +15,8 @@ Scale notes:
     Verification joins candidate pairs against per-doc shingle-set ARRAYS
     (array_intersect) — O(|candidates|) rows, never all pairs, never the
     exploded shingle table.
-  * simhash: linear in total words; fingerprints then group by simhash
-    bucket — O(n) near-dup blocking at 100 TB scale.
+  * simhash16 / simhash64: linear in total words. simhash64_near_pairs
+    blocks on its four 16-bit slices — an equality join, O(n) blocking.
 """
 
 from __future__ import annotations
@@ -24,20 +25,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nifi_daffodil_spark.operators.util import spread_scan
-
-
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups by canonicalized content hash; keeps min id as keeper."""
-    fp = F.md5(F.lower(F.trim(F.col(text_col))))
-    return (
-        df.withColumn("fp", fp)
-        .groupBy("fp")
-        .agg(
-            F.min(id_col).alias("keeper"),
-            F.count(F.lit(1)).alias("n_copies"),
-            F.sort_array(F.collect_list(id_col)).alias("members"),
-        )
-    )
 
 
 def word_shingle_array(text_col: str = "text", k: int = 3):
@@ -415,7 +402,7 @@ def simhash64_near_pairs(
     blocking: by pigeonhole, two fingerprints within hamming <= 3 agree
     exactly on at least one of the 4 16-bit slices, so candidates come from
     an equality join on (band, slice) — O(n) blocking, no cross join, and
-    (unlike the 16-bit one-bit-flip scheme) no 17x row expansion."""
+    each doc is expanded only 4x."""
     fp = simhash64(df, id_col, text_col)
     bands = fp.select(
         id_col,
@@ -458,47 +445,6 @@ def simhash64_near_pairs(
         .select("d1", "d2", ham.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
-    )
-
-
-def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                       max_hamming: int = 2) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, blocked on the fingerprint
-    itself (exact-bucket pass) plus single-bit-flip buckets — O(n) blocking,
-    no cross join."""
-    fp = simhash16(df, id_col, text_col)
-    # expand each doc into its fingerprint + all 16 one-bit-flip variants:
-    # two fingerprints within hamming<=2 share at least one variant bucket
-    variants = fp.select(
-        id_col,
-        "simhash16",
-        F.explode(
-            F.array(
-                F.col("simhash16"),
-                *[
-                    F.col("simhash16").bitwiseXOR(F.lit(1 << j)).cast("long")
-                    for j in range(16)
-                ],
-            )
-        ).alias("bucket"),
-    )
-    a = variants.select(F.col(id_col).alias("d1"), F.col("simhash16").alias("f1"), "bucket")
-    b = variants.select(F.col(id_col).alias("d2"), F.col("simhash16").alias("f2"),
-                        F.col("bucket").alias("bucket2"))
-    ham = sum(
-        (
-            F.shiftright(F.col("f1").bitwiseXOR(F.col("f2")), j).bitwiseAND(F.lit(1))
-            for j in range(16)
-        ),
-        F.lit(0),
-    )
-    return (
-        a.join(b, (F.col("bucket") == F.col("bucket2")) & (F.col("d1") < F.col("d2")))
-        .select("d1", "d2", "f1", "f2")
-        .distinct()
-        .withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("d1", "d2", "hamming")
     )
 
 

@@ -10,7 +10,8 @@ the value-hash comparison deterministic across engines:
   * integer divisions stay integer; ratios are double with identical
     operation order
   * md5() is the portable hash (same hex string in Spark and DuckDB) for
-    fingerprints, minhash and simhash
+    fingerprints and simhash; MinHash signatures use xxhash64, which stays
+    engine-internal (its oracle is the exhaustive exact-Jaccard pair set)
   * top-k always carries a total tiebreak ordering
 
 The CDC mapping onto the driver's `events` table: lsn := event_id,
@@ -732,19 +733,6 @@ FROM documents GROUP BY 1
 """
 
 
-def _shingles_df(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(split(text, ' ')) - 3), "
-                "i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))"
-            )
-        ).alias("sh"),
-    ).distinct()
-
-
 _SH_SQL = """
 SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
 FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -759,16 +747,9 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     join is quadratic on stop-phrases at corpus scale (round-1 verdict).
     The Jaccard itself stays exact over full shingle sets; the oracle
     mirrors the cap (which does not bind at this sf: max df here is 7)."""
-    from nifi_daffodil_spark.operators.text_dedup import jaccard_pairs
+    from nifi_daffodil_spark.operators.text_dedup import jaccard_pairs, word_shingles
 
-    # localCheckpoint, not persist: persist() leaked cached blocks across
-    # repeated calls (same issue ADVICE flagged on srp_lsh_pairs); checkpoint
-    # blocks free when the result is garbage-collected
-    sh = (
-        _shingles_df(spark, sf_dir)
-        .withColumnRenamed("doc_id", "_id")
-        .localCheckpoint(eager=True)
-    )
+    sh = word_shingles(_t(spark, sf_dir, "documents"))
     return jaccard_pairs(sh, JACCARD_T, max_df=MAX_SHINGLE_DF).select(
         "d1", "d2", F.round("jaccard", 6).alias("jaccard")
     )
@@ -1060,23 +1041,9 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 def q_dedup_simhash(spark, sf_dir):
     """16-bit SimHash fingerprint from md5 nibble top-bits over the word
     multiset — portable: instr('0123456789abcdef', nibble) works in both."""
-    d = _t(spark, sf_dir, "documents")
-    words = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    hexed = words.withColumn("h", F.md5("w"))
-    nib = [
-        F.when(
-            F.instr(F.lit("0123456789abcdef"), F.substring("h", j + 1, 1)) - 1 >= 8, 1
-        ).otherwise(-1)
-        for j in range(16)
-    ]
-    agg = hexed.groupBy("doc_id").agg(
-        *[F.sum(nib[j]).alias(f"s{j}") for j in range(16)]
-    )
-    bits = sum(
-        (F.when(F.col(f"s{j}") >= 0, F.lit(1 << j)).otherwise(F.lit(0)) for j in range(16)),
-        F.lit(0),
-    )
-    return agg.select("doc_id", bits.cast("long").alias("simhash16"))
+    from nifi_daffodil_spark.operators.text_dedup import simhash16
+
+    return simhash16(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def _simhash_oracle() -> str:
@@ -2222,126 +2189,75 @@ GROUP BY etype
 # registry
 # ---------------------------------------------------------------------------
 
+def _catalogue() -> list[tuple[str, Callable[[SparkSession, str], DataFrame], str]]:
+    """The one registry: (name, Spark query, DuckDB oracle) per entry.
+    queries() and oracle_sql() are both views of this table, so an entry
+    cannot exist on one side only."""
+    return [
+        ("cdc_lww_dedup", q_cdc_lww_dedup, O_CDC_LWW),
+        ("cdc_route_validation", q_cdc_route_validation, O_CDC_ROUTE),
+        ("cdc_merge_upsert", q_cdc_merge_upsert, O_CDC_MERGE),
+        ("cdc_delete_apply", q_cdc_delete_apply, O_CDC_DELETE),
+        ("cdc_epoch_metrics", q_cdc_epoch_metrics, O_CDC_EPOCH),
+        ("cdc_gap_analysis", q_cdc_gap_analysis, O_CDC_GAP),
+        ("cdc_hot_keys_topk", q_cdc_hot_keys_topk, O_CDC_HOTK),
+        ("cdc_exactly_consumed", q_cdc_exactly_consumed, O_CDC_CONSUMED),
+        ("cdc_json_extract", q_cdc_json_extract, O_CDC_JSON),
+        ("cdc_time_buckets", q_cdc_time_buckets, O_CDC_TIME),
+        ("cdc_collect_transcript", q_cdc_collect_transcript, O_CDC_COLLECT),
+        ("cdc_normalize_sql", q_cdc_normalize_sql, O_CDC_NORM),
+        ("cdc_external_vars", q_cdc_external_vars, O_CDC_EXTVARS),
+        ("cdc_format_dispatch", q_cdc_format_dispatch, O_CDC_DISPATCH),
+        ("cdc_el_resolve", q_cdc_el_resolve, O_CDC_EL),
+        ("cdc_schema_dispatch", q_cdc_schema_dispatch, O_CDC_SCHEMA_DISPATCH),
+        ("binary_fields", q_binary_fields, _binary_oracle()),
+        ("join_broadcast_enrich", q_join_broadcast_enrich, O_JOIN_BROADCAST),
+        ("join_salted_orders", q_join_salted_orders, O_JOIN_SALTED),
+        ("setop_gone_keys", q_setop_gone_keys, O_SETOP),
+        ("agg_pricing_summary", q_agg_pricing_summary, O_AGG_PRICING),
+        ("agg_rollup", q_agg_rollup, O_AGG_ROLLUP),
+        ("dedup_exact", q_dedup_exact, O_DEDUP_EXACT),
+        ("dedup_ngram_jaccard", q_dedup_ngram_jaccard, O_NGRAM_JACCARD),
+        ("dedup_components", q_dedup_components, O_DEDUP_COMPONENTS),
+        # LSH must reproduce the exhaustive (uncapped) result:
+        ("dedup_minhash_lsh", q_dedup_minhash_lsh, O_NGRAM_JACCARD_EXHAUSTIVE),
+        ("dedup_corpus", q_dedup_corpus, O_DEDUP_CORPUS),
+        ("dedup_semantic", q_dedup_semantic, _semantic_oracle()),
+        ("corpus_pipeline", q_corpus_pipeline, O_CORPUS_PIPELINE),
+        ("dedup_simhash", q_dedup_simhash, _simhash_oracle()),
+        ("doc_simhash64", q_doc_simhash64, _simhash64_oracle()),
+        ("neardup_cosine", q_neardup_cosine, O_NEARDUP_COS),
+        ("neardup_cosine_lsh", q_neardup_cosine_lsh, _srp_oracle()),
+        ("ann_topk", q_ann_topk, O_ANN_TOPK),
+        ("ann_ivf_batch", q_ann_ivf_batch, O_ANN_IVF_BATCH),
+        ("text_langid", q_text_langid, O_LANGID),
+        ("text_quality", q_text_quality, O_QUALITY),
+        ("text_token_count", q_text_token_count, O_TOKENS),
+        ("doc_fingerprint", q_doc_fingerprint, O_FINGERPRINT),
+        ("doc_winnow", q_doc_winnow, O_DOC_WINNOW),
+        ("multimodal_bytes", q_multimodal_bytes, O_MULTIMODAL),
+        ("multimodal_decode", q_multimodal_decode, _multimodal_decode_oracle()),
+        ("asof_join", q_asof_join, O_ASOF_JOIN),
+        ("asof_tolerance", q_asof_tolerance, O_ASOF_TOLERANCE),
+        ("asof_forward", q_asof_forward, O_ASOF_FORWARD),
+        ("sessionize", q_sessionize, O_SESSIONIZE),
+        ("agg_quantiles", q_agg_quantiles, O_AGG_QUANTILES),
+        ("tpch_q3_topk", q_tpch_q3_topk, O_TPCH_Q3),
+        ("tpch_q4_semijoin", q_tpch_q4_semijoin, O_TPCH_Q4),
+        ("cdc_scd2", q_cdc_scd2, O_CDC_SCD2),
+        ("text_repetition", q_text_repetition, O_TEXT_REPETITION),
+        ("cdc_pivot", q_cdc_pivot, O_CDC_PIVOT),
+        ("cdc_rolling_window", q_cdc_rolling_window, O_CDC_ROLLING),
+        ("agg_count_distinct", q_agg_count_distinct, O_AGG_COUNT_DISTINCT),
+        ("cdc_changelog", q_cdc_changelog, O_CDC_CHANGELOG),
+        ("cdc_incr_agg", q_cdc_incr_agg, O_CDC_INCR_AGG),
+        ("csv_roundtrip", q_csv_roundtrip, O_CSV_ROUNDTRIP),
+    ]
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "cdc_lww_dedup": q_cdc_lww_dedup,
-        "cdc_route_validation": q_cdc_route_validation,
-        "cdc_merge_upsert": q_cdc_merge_upsert,
-        "cdc_delete_apply": q_cdc_delete_apply,
-        "cdc_epoch_metrics": q_cdc_epoch_metrics,
-        "cdc_gap_analysis": q_cdc_gap_analysis,
-        "cdc_hot_keys_topk": q_cdc_hot_keys_topk,
-        "cdc_exactly_consumed": q_cdc_exactly_consumed,
-        "cdc_json_extract": q_cdc_json_extract,
-        "cdc_time_buckets": q_cdc_time_buckets,
-        "cdc_collect_transcript": q_cdc_collect_transcript,
-        "cdc_normalize_sql": q_cdc_normalize_sql,
-        "cdc_external_vars": q_cdc_external_vars,
-        "cdc_format_dispatch": q_cdc_format_dispatch,
-        "cdc_el_resolve": q_cdc_el_resolve,
-        "cdc_schema_dispatch": q_cdc_schema_dispatch,
-        "binary_fields": q_binary_fields,
-        "join_broadcast_enrich": q_join_broadcast_enrich,
-        "join_salted_orders": q_join_salted_orders,
-        "setop_gone_keys": q_setop_gone_keys,
-        "agg_pricing_summary": q_agg_pricing_summary,
-        "agg_rollup": q_agg_rollup,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_components": q_dedup_components,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_corpus": q_dedup_corpus,
-        "dedup_semantic": q_dedup_semantic,
-        "corpus_pipeline": q_corpus_pipeline,
-        "dedup_simhash": q_dedup_simhash,
-        "doc_simhash64": q_doc_simhash64,
-        "neardup_cosine": q_neardup_cosine,
-        "neardup_cosine_lsh": q_neardup_cosine_lsh,
-        "ann_topk": q_ann_topk,
-        "ann_ivf_batch": q_ann_ivf_batch,
-        "text_langid": q_text_langid,
-        "text_quality": q_text_quality,
-        "text_token_count": q_text_token_count,
-        "doc_fingerprint": q_doc_fingerprint,
-        "doc_winnow": q_doc_winnow,
-        "multimodal_bytes": q_multimodal_bytes,
-        "multimodal_decode": q_multimodal_decode,
-        "asof_join": q_asof_join,
-        "asof_tolerance": q_asof_tolerance,
-        "asof_forward": q_asof_forward,
-        "sessionize": q_sessionize,
-        "agg_quantiles": q_agg_quantiles,
-        "tpch_q3_topk": q_tpch_q3_topk,
-        "tpch_q4_semijoin": q_tpch_q4_semijoin,
-        "cdc_scd2": q_cdc_scd2,
-        "text_repetition": q_text_repetition,
-        "cdc_pivot": q_cdc_pivot,
-        "cdc_rolling_window": q_cdc_rolling_window,
-        "agg_count_distinct": q_agg_count_distinct,
-        "cdc_changelog": q_cdc_changelog,
-        "cdc_incr_agg": q_cdc_incr_agg,
-        "csv_roundtrip": q_csv_roundtrip,
-    }
+    return {name: query for name, query, _ in _catalogue()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "cdc_lww_dedup": O_CDC_LWW,
-        "cdc_route_validation": O_CDC_ROUTE,
-        "cdc_merge_upsert": O_CDC_MERGE,
-        "cdc_delete_apply": O_CDC_DELETE,
-        "cdc_epoch_metrics": O_CDC_EPOCH,
-        "cdc_gap_analysis": O_CDC_GAP,
-        "cdc_hot_keys_topk": O_CDC_HOTK,
-        "cdc_exactly_consumed": O_CDC_CONSUMED,
-        "cdc_json_extract": O_CDC_JSON,
-        "cdc_time_buckets": O_CDC_TIME,
-        "cdc_collect_transcript": O_CDC_COLLECT,
-        "cdc_normalize_sql": O_CDC_NORM,
-        "cdc_external_vars": O_CDC_EXTVARS,
-        "cdc_format_dispatch": O_CDC_DISPATCH,
-        "cdc_el_resolve": O_CDC_EL,
-        "cdc_schema_dispatch": O_CDC_SCHEMA_DISPATCH,
-        "binary_fields": _binary_oracle(),
-        "join_broadcast_enrich": O_JOIN_BROADCAST,
-        "join_salted_orders": O_JOIN_SALTED,
-        "setop_gone_keys": O_SETOP,
-        "agg_pricing_summary": O_AGG_PRICING,
-        "agg_rollup": O_AGG_ROLLUP,
-        "dedup_exact": O_DEDUP_EXACT,
-        "dedup_ngram_jaccard": O_NGRAM_JACCARD,
-        "dedup_components": O_DEDUP_COMPONENTS,
-        # LSH must reproduce the exhaustive (uncapped) result:
-        "dedup_minhash_lsh": O_NGRAM_JACCARD_EXHAUSTIVE,
-        "dedup_corpus": O_DEDUP_CORPUS,
-        "dedup_semantic": _semantic_oracle(),
-        "corpus_pipeline": O_CORPUS_PIPELINE,
-        "dedup_simhash": _simhash_oracle(),
-        "doc_simhash64": _simhash64_oracle(),
-        "neardup_cosine": O_NEARDUP_COS,
-        "neardup_cosine_lsh": _srp_oracle(),
-        "ann_topk": O_ANN_TOPK,
-        "ann_ivf_batch": O_ANN_IVF_BATCH,
-        "text_langid": O_LANGID,
-        "text_quality": O_QUALITY,
-        "text_token_count": O_TOKENS,
-        "doc_fingerprint": O_FINGERPRINT,
-        "doc_winnow": O_DOC_WINNOW,
-        "multimodal_bytes": O_MULTIMODAL,
-        "multimodal_decode": _multimodal_decode_oracle(),
-        "asof_join": O_ASOF_JOIN,
-        "asof_tolerance": O_ASOF_TOLERANCE,
-        "asof_forward": O_ASOF_FORWARD,
-        "sessionize": O_SESSIONIZE,
-        "agg_quantiles": O_AGG_QUANTILES,
-        "tpch_q3_topk": O_TPCH_Q3,
-        "tpch_q4_semijoin": O_TPCH_Q4,
-        "cdc_scd2": O_CDC_SCD2,
-        "text_repetition": O_TEXT_REPETITION,
-        "cdc_pivot": O_CDC_PIVOT,
-        "cdc_rolling_window": O_CDC_ROLLING,
-        "agg_count_distinct": O_AGG_COUNT_DISTINCT,
-        "cdc_changelog": O_CDC_CHANGELOG,
-        "cdc_incr_agg": O_CDC_INCR_AGG,
-        "csv_roundtrip": O_CSV_ROUNDTRIP,
-    }
+    return {name: oracle for name, _, oracle in _catalogue()}

@@ -70,8 +70,3 @@ def build_session(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def get_active_or_build(**kw) -> SparkSession:
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session(**kw)

@@ -310,15 +310,6 @@ class ParquetStateSink(TranscriptSink):
         lineage: list[tuple] | None = None,
         touched: list[int] | None = None,
     ) -> dict:
-        import os as _os
-
-        _timing = _os.environ.get("NDS_TIMING") == "1"
-
-        def _tl(label: str, tprev: float) -> float:
-            if _timing:
-                print(f"[sink] {label}: {time.monotonic() - tprev:.2f}s", flush=True)
-            return time.monotonic()
-
         t0 = time.monotonic()
         manifest = self._read_manifest()
         if str(epoch_id) in manifest["epochs"]:
@@ -337,7 +328,6 @@ class ParquetStateSink(TranscriptSink):
                 "batch's bucket column before retrying this epoch"
             )
 
-        tprev = time.monotonic()
         # quarantine append runs CONCURRENTLY with the delta write +
         # compaction (guide §2.6 — independent outputs, and neither job
         # alone keeps every core busy through its tail): the thread is
@@ -394,7 +384,6 @@ class ParquetStateSink(TranscriptSink):
                 batch, os.path.join(self.root, "data", delta),
                 repartition=False,  # engine batches arrive bucket-partitioned
             )
-            tprev = _tl("delta write", tprev)
             for b in touched:
                 if b not in written:
                     continue  # defensive: empty partition never materialized
@@ -427,7 +416,6 @@ class ParquetStateSink(TranscriptSink):
                     ent["deltas"] = []
                     if b in ran:
                         ent["runs"].append(run)
-                tprev = _tl(f"L0->L1 folded {len(over)} buckets", tprev)
 
                 # level 1 -> base: only when a bucket's RUN count also
                 # exceeds max_runs does its base get rewritten — amortized,
@@ -453,14 +441,12 @@ class ParquetStateSink(TranscriptSink):
                             "runs": [],
                             "deltas": [],
                         }
-                    tprev = _tl(f"L1->base folded {len(over2)} buckets", tprev)
 
             snapshot_id = f"{delta}-{uuid.uuid5(uuid.NAMESPACE_URL, f'{self.root}/{epoch_id}')}"
             if quar_thread is not None:
                 quar_thread.join()
                 if quar_err:
                     raise quar_err[0]
-            tprev = _tl("quarantine write (overlapped) joined", tprev)
             if lineage:
                 self._write_lineage(lineage, snapshot_id, epoch_id)
 

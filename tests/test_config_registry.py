@@ -6,8 +6,6 @@ from nifi_daffodil_spark.config import EngineConfig, SchemaRegistry, default_reg
 def test_engine_config_validation():
     with pytest.raises(ValueError):
         EngineConfig(validation_mode="bogus")
-    with pytest.raises(ValueError):
-        EngineConfig(infoset_format="yaml")
     c = EngineConfig(external_variables={"byteOrder": "LE"})
     assert hash(c) == hash(EngineConfig(external_variables={"byteOrder": "LE"}))
     assert hash(c) != hash(EngineConfig(external_variables={"byteOrder": "BE"}))

@@ -13,6 +13,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.01"
 
@@ -114,3 +116,31 @@ def test_dedup_corpus_simhash_method(spark):
     got = {(r["doc_id"], r["component"]) for r in drops.collect()}
     assert got == expected and got  # non-empty at sf0.01
     assert deduped.count() == corpus.count() - len(got)
+
+
+# the catalogue entries built on the shared text_dedup operators (simhash16,
+# word_shingles, jaccard_pairs, minhash_lsh_pairs, resolve_keepers)
+ORACLE_GATED = ("dedup_simhash", "dedup_ngram_jaccard", "dedup_components", "dedup_minhash_lsh")
+
+
+@pytest.mark.parametrize(
+    "sf_dir", [os.path.join(os.path.dirname(SF), "sf0.001"), SF], ids=os.path.basename
+)
+def test_dedup_entries_match_duckdb_oracle(spark, sf_dir):
+    """The entries equal their DuckDB oracle_sql() under the oracle gate's
+    row-count/schema/value-hash comparison (tools/check_oracle.canon)."""
+    import duckdb
+
+    from nifi_daffodil_spark.plans import driver_queries as dq
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from check_oracle import canon
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    qs, oracles = dq.queries(), dq.oracle_sql()
+    for name in ORACLE_GATED:
+        got = canon(qs[name](spark, sf_dir).toPandas())
+        assert got == canon(con.execute(oracles[name]).df()), name

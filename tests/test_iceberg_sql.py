@@ -149,7 +149,7 @@ def test_sink_parity_quarantine_and_lineage(spark, tmp_path):
         "lsn long, op string, conv_id string, turn_idx long, role string, "
         "text string, tool string, ts timestamp"
     )
-    cfg = EngineConfig(n_buckets=8, n_salt=4)
+    cfg = EngineConfig(n_buckets=8)
 
     rec = _RecorderSink()
     CdcEngine(spark, rec, cfg).process_batch(

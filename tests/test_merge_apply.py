@@ -17,7 +17,7 @@ def _events(spark, rows):
 
 def _engine(spark, tmp_path, **cfg):
     sink = ParquetStateSink(spark, str(tmp_path / "table"), n_buckets=8)
-    return CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4, **cfg))
+    return CdcEngine(spark, sink, EngineConfig(n_buckets=8, **cfg))
 
 
 def test_upsert_delete_across_epochs(spark, tmp_path):
@@ -211,7 +211,7 @@ def test_delta_chain_bounded_by_tiered_compaction(spark, tmp_path):
     sink = ParquetStateSink(
         spark, str(tmp_path / "t"), n_buckets=8, max_deltas=1, max_runs=1
     )
-    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4))
+    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8))
     saw_run = saw_base = False
     n_epochs = 6
     for e in range(n_epochs):
@@ -238,7 +238,7 @@ def test_replay_quarantine_after_config_fix(spark, tmp_path):
 
     sink = ParquetStateSink(spark, str(tmp_path / "t"), n_buckets=8)
     strict = CdcEngine(
-        spark, sink, EngineConfig(n_buckets=8, n_salt=4, validation_mode="full")
+        spark, sink, EngineConfig(n_buckets=8, validation_mode="full")
     )
     strict.process_batch(
         _events(
@@ -255,7 +255,7 @@ def test_replay_quarantine_after_config_fix(spark, tmp_path):
     assert sink.read_quarantine().count() == 2
 
     relaxed = CdcEngine(
-        spark, sink, EngineConfig(n_buckets=8, n_salt=4, validation_mode="limited")
+        spark, sink, EngineConfig(n_buckets=8, validation_mode="limited")
     )
     st = relaxed.replay_quarantine(epoch_id=100)
     assert not st.skipped
@@ -306,7 +306,7 @@ def test_compacted_files_sorted_for_data_skipping(spark, tmp_path):
     from nifi_daffodil_spark.config import EngineConfig
     from nifi_daffodil_spark.engine import CdcEngine
 
-    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4))
+    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8))
     for e in range(4):  # enough epochs to materialize run- and snap- dirs
         rows = [
             (400 * e + i, "I", f"c{i % 17:02d}", 100 * e + i // 17, "user",
@@ -367,7 +367,7 @@ def test_retention_expires_stale_conversations(spark, tmp_path):
     new_ts = dt.datetime(2024, 6, 1)
     cutoff = dt.datetime(2024, 3, 1)
     sink = ParquetStateSink(spark, str(tmp_path / "t"), n_buckets=8)
-    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4))
+    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8))
     roll = ConvRollup(spark, sink, str(tmp_path / "roll"))
     eng.attach_rollup(roll)
     ev = spark.createDataFrame(
@@ -427,7 +427,7 @@ def test_retention_on_empty_table_skips(spark, tmp_path):
     from nifi_daffodil_spark.sinks.parquet_state import ParquetStateSink
 
     sink = ParquetStateSink(spark, str(tmp_path / "t"), n_buckets=8)
-    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4))
+    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8))
     assert eng.apply_retention(dt.datetime(2024, 1, 1), 0).skipped
 
 
@@ -457,7 +457,7 @@ def test_concurrent_writers_exactly_once(spark, tmp_path):
 
     def run(name, epoch, rows):
         sink = ParquetStateSink(spark, root, n_buckets=8)
-        eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4))
+        eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8))
         stats[name] = eng.process_batch(_ev(rows), epoch)
 
     same = [(1, "I", "a", 0, "user", "v1", None, TSX)]
@@ -508,7 +508,7 @@ def test_apply_after_concurrent_reshard_fails_fast(spark, tmp_path):
         )
 
     sink1 = ParquetStateSink(spark, root, n_buckets=8)
-    eng1 = CdcEngine(spark, sink1, EngineConfig(n_buckets=8, n_salt=4))
+    eng1 = CdcEngine(spark, sink1, EngineConfig(n_buckets=8))
     eng1.process_batch(_ev([(1, "I", "a", 0, "user", "v1", None, TSX)]), 0)
 
     # maintenance process reshards underneath writer 1
@@ -518,7 +518,7 @@ def test_apply_after_concurrent_reshard_fails_fast(spark, tmp_path):
         eng1.process_batch(_ev([(2, "I", "b", 0, "user", "v2", None, TSX)]), 1)
     # the failed epoch never committed — a correctly-reopened writer applies it
     sink2 = ParquetStateSink(spark, root, n_buckets=16)
-    eng2 = CdcEngine(spark, sink2, EngineConfig(n_buckets=16, n_salt=4))
+    eng2 = CdcEngine(spark, sink2, EngineConfig(n_buckets=16))
     assert not eng2.process_batch(
         _ev([(2, "I", "b", 0, "user", "v2", None, TSX)]), 1).skipped
     assert sink2.read_transcripts().count() == 2

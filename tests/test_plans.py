@@ -63,7 +63,7 @@ def test_lww_dedup_no_extra_exchange_after_repartition(spark):
     from nifi_daffodil_spark.config import EngineConfig
     from nifi_daffodil_spark.engine import CdcEngine
 
-    eng = CdcEngine(spark, None, EngineConfig(n_buckets=8, n_salt=4))
+    eng = CdcEngine(spark, None, EngineConfig(n_buckets=8))
     ev = spark.createDataFrame(
         [(1, "I", "c", 0, "user", "t", None, None)],
         "lsn long, op string, conv_id string, turn_idx long, role string, "
@@ -252,3 +252,10 @@ def test_incr_agg_two_exchanges_no_recompute_join(spark):
     assert "Exchange hashpartitioning(user_id" in plan
     assert "Join" not in plan
     assert "partial_max" in plan  # map-side combine below the image exchange
+
+
+def test_queries_and_oracles_expose_the_same_57_names():
+    """queries() and oracle_sql() are views of one catalogue table."""
+    names = list(dq.queries())
+    assert len(names) == len(set(names)) == 57
+    assert names == list(dq.oracle_sql())

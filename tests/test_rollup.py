@@ -28,7 +28,7 @@ def _events(spark, rows):
 
 def _setup(spark, tmp_path, **sink_kw):
     sink = ParquetStateSink(spark, str(tmp_path / "table"), n_buckets=8, **sink_kw)
-    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4))
+    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8))
     roll = ConvRollup(spark, sink, str(tmp_path / "rollup"))
     return eng, roll
 
@@ -260,7 +260,7 @@ def test_rollup_rebuilds_after_reshard(spark, tmp_path):
                         (2, "I", "b", 0, "user", "yo", None, TS)]), 0)
     roll.refresh()
     eng.sink.reshard(2)
-    eng2 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=2, n_salt=4))
+    eng2 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=2))
     eng2.process_batch(
         _events(spark, [(3, "U", "a", 0, "user", "hey", None, TS)]), 1)
     s = roll.refresh()
@@ -291,7 +291,7 @@ def test_rollup_legacy_manifest_rebuilds_after_reshard(spark, tmp_path):
     m.pop("n_buckets")
     roll._write_manifest(m)
     eng.sink.reshard(2)
-    eng2 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=2, n_salt=4))
+    eng2 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=2))
     eng2.process_batch(
         _events(spark, [(3, "U", "a", 0, "user", "heyhey", None, TS)]), 1)
     roll.refresh()

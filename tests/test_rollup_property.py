@@ -55,7 +55,7 @@ def test_rollup_matches_recompute_under_any_interleaving(
     ops, cuts, rng = plan
     tmp_path = tmp_path_factory.mktemp("roll_prop")
     sink = ParquetStateSink(spark, str(tmp_path / "table"), n_buckets=8)
-    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4))
+    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=8))
     roll = ConvRollup(spark, sink, str(tmp_path / "rollup"))
     eng.attach_rollup(roll)
 

@@ -28,7 +28,7 @@ def _events(spark, rows):
 
 def _engine(spark, tmp_path, **sink_kw):
     sink = ParquetStateSink(spark, str(tmp_path / "table"), n_buckets=8, **sink_kw)
-    return CdcEngine(spark, sink, EngineConfig(n_buckets=8, n_salt=4))
+    return CdcEngine(spark, sink, EngineConfig(n_buckets=8))
 
 
 def _texts(df):
@@ -236,7 +236,7 @@ def test_reshard_partition_evolution(spark, tmp_path):
     # says 8, so build the batch bucket column fresh via a new engine)
     from nifi_daffodil_spark.config import EngineConfig
     from nifi_daffodil_spark.engine import CdcEngine
-    eng2 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=16, n_salt=4))
+    eng2 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=16))
     eng2.process_batch(
         _events(spark, [(3, "U", "a", 0, "user", "v2", None, TS)]), 1)
     assert _texts(eng.sink.read_transcripts()) == {
@@ -269,11 +269,11 @@ def test_changelog_correct_across_roundtrip_reshard(spark, tmp_path):
         _events(spark, [(1, "I", "a", 0, "user", "v1", None, TS),
                         (2, "I", "b", 0, "user", "b1", None, TS)]), 0)
     eng.sink.reshard(4)
-    eng4 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=4, n_salt=4))
+    eng4 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=4))
     eng4.process_batch(
         _events(spark, [(3, "U", "a", 0, "user", "v2", None, TS)]), 1)
     eng.sink.reshard(8)
-    eng8 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=8, n_salt=4))
+    eng8 = CdcEngine(spark, eng.sink, EngineConfig(n_buckets=8))
     eng8.process_batch(
         _events(spark, [(4, "D", "b", 0, None, None, None, TS)]), 2)
     rows = {r["conv_id"]: r for r in eng.sink.read_changelog(0, 2).collect()}

@@ -21,14 +21,6 @@ def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
-def test_exact_dedup(spark, docs):
-    out = {r["keeper"]: r for r in text_dedup.exact_dedup(docs).collect()}
-    # 0 and 1 collapse; 4 only matches after lower+trim
-    assert out[0]["n_copies"] == 3 and out[0]["members"] == [0, 1, 4]
-    assert out[2]["n_copies"] == 1
-    assert sum(r["n_copies"] for r in out.values()) == len(DOCS)
-
-
 def test_ngram_jaccard_pairs(spark, docs):
     sh = text_dedup.word_shingles(docs.filter(F.col("doc_id").isin(0, 2, 3)))
     pairs = {(r["d1"], r["d2"]): r["jaccard"] for r in text_dedup.jaccard_pairs(sh, 0.3).collect()}
@@ -54,13 +46,6 @@ def test_simhash_identical_for_dups(spark, docs):
     assert 0 <= fp[0] < 2**16
 
 
-def test_simhash_near_pairs(spark, docs):
-    pairs = {(r["d1"], r["d2"]): r["hamming"] for r in
-             text_dedup.simhash_near_pairs(docs, max_hamming=3).collect()}
-    assert pairs.get((0, 1)) == 0
-    assert (3, 5) in pairs and pairs[(3, 5)] == 0
-
-
 def _vec_df(spark, n=80, dim=16, seed=7):
     rng = np.random.default_rng(seed)
     m = rng.standard_normal((n, dim))
@@ -69,38 +54,35 @@ def _vec_df(spark, n=80, dim=16, seed=7):
 
 
 def test_brute_force_topk_both_paths_agree(spark):
+    """The whole-table Arrow scan and the IVF path probing every cell
+    (assign -> filter -> per-partition top-k) return the same ranking."""
     df, m = _vec_df(spark)
     q = m[0].tolist()
-    a = [r["vec_id"] for r in similarity.brute_force_topk(df, q, 5).collect()]
-    b = [r["vec_id"] for r in similarity.brute_force_topk_arrow(df, q, 5).collect()]
+    cents = similarity.ivf_train_centroids(df, n_cells=4, seed=7)
+    a = [r["vec_id"] for r in similarity.brute_force_topk_arrow(df, q, 5).collect()]
+    b = [r["vec_id"] for r in similarity.ivf_topk(df, q, cents, k=5, nprobe=4).collect()]
     assert a[0] == 0 and a == b  # self is the best match; paths agree
 
 
 def test_brute_force_matches_numpy(spark):
     df, m = _vec_df(spark)
     q = m[3]
-    got = [r["vec_id"] for r in similarity.brute_force_topk(df, q.tolist(), 8).collect()]
+    got = [r["vec_id"] for r in similarity.brute_force_topk_arrow(df, q.tolist(), 8).collect()]
     cos = (m @ q) / (np.linalg.norm(m, axis=1) * np.linalg.norm(q))
     want = list(np.argsort(-cos)[:8])
-    assert got == want
+    assert got == want and got[0] == 3  # self is the best match
 
 
-def test_lsh_bucketed_recall(spark):
-    df, m = _vec_df(spark, n=200)
-    q = m[5].tolist()
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(df, q, 3).collect()]
-    ann = [r["vec_id"] for r in similarity.lsh_bucketed_topk(df, q, k=3, n_bits=6).collect()]
-    # multi-probe SRP must at least find the identical vector + most of top-3
-    assert ann[0] == 5
-    assert len(set(exact) & set(ann)) >= 2
-
-
-def test_srp_bucket_deterministic(spark):
-    df, _ = _vec_df(spark, n=30)
-    b1 = {r["vec_id"]: r["bucket"] for r in similarity.srp_bucket(df, 16, 6).collect()}
-    b2 = {r["vec_id"]: r["bucket"] for r in similarity.srp_bucket(df, 16, 6).collect()}
-    assert b1 == b2
-    assert all(0 <= b < 64 for b in b1.values())
+def test_brute_force_topk_boundary_ties_keep_smallest_ids(spark):
+    """Ten identical vectors stored as ids 9..0 in ONE partition: every
+    cosine ties, so the exact top-3 under (cos desc, vec_id) is {0, 1, 2}.
+    A local top-k that breaks ties by row position keeps {9, 8, 7}."""
+    v = [1.0, 2.0, 3.0]
+    df = spark.createDataFrame(
+        [(i, v) for i in range(9, -1, -1)], "vec_id long, v array<double>"
+    ).coalesce(1)
+    got = [r["vec_id"] for r in similarity.brute_force_topk_arrow(df, v, 3).collect()]
+    assert got == [0, 1, 2]
 
 
 def test_multimodal_features(spark):
@@ -231,7 +213,6 @@ def test_ivf_topk_recall_vs_brute_force(spark):
 
     from nifi_daffodil_spark.operators.similarity import (
         as_double_vecs,
-        brute_force_topk,
         ivf_assign,
         ivf_topk,
         ivf_train_centroids,
@@ -243,7 +224,10 @@ def test_ivf_topk_recall_vs_brute_force(spark):
     q = e.filter(F.col("vec_id") == 0).first()["v"]
     cents = ivf_train_centroids(e, n_cells=8, seed=7)
     base = e.filter(F.col("vec_id") != 0)
-    exact = [r["vec_id"] for r in brute_force_topk(base, q, k=10).collect()]
+    pdf = base.toPandas()
+    m, ids = np.stack(pdf["v"].to_numpy()), pdf["vec_id"].to_numpy()
+    cos = (m @ (np.asarray(q) / np.linalg.norm(q))) / np.linalg.norm(m, axis=1)
+    exact = ids[np.lexsort((ids, -cos))[:10]].tolist()
     got = [r["vec_id"] for r in ivf_topk(base, q, cents, k=10, nprobe=8).collect()]
     assert got == exact  # nprobe=all cells == exhaustive
     # determinism: same seed -> same centroids -> same assignment

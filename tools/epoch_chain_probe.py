@@ -46,7 +46,7 @@ def main() -> int:
     spark = build_session(app_name="epoch-chain-probe", cores=args.cores)
     root = tempfile.mkdtemp(prefix="epoch_chain_")
     sink = ParquetStateSink(spark, root, n_buckets=32)
-    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=32, n_salt=8))
+    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=32))
 
     walls = []
     try:

@@ -74,7 +74,7 @@ spark.sparkContext.setLogLevel("WARN")
 v0 = sorted(glob.glob(os.path.join(wal, "v0", "*.parquet")))
 v1 = sorted(glob.glob(os.path.join(wal, "v1", "*.parquet")))
 sink = ParquetStateSink(spark, root, n_buckets=32)
-eng = CdcEngine(spark, sink, EngineConfig(n_buckets=32, n_salt=8))
+eng = CdcEngine(spark, sink, EngineConfig(n_buckets=32))
 eng.process_batch(read_wal_batch(spark, v0[:2], "v0"), 10_000)  # warm-up epoch
 t0 = time.monotonic()
 for i, (paths, ver) in enumerate([(v0[2:], "v0"), (v1, "v1")]):
