@@ -167,7 +167,7 @@ class CdcEngine:
         valid, quarantine = split_valid(validated)
         batch = self._finish_batch(valid).persist()
         try:
-            # one distributed pass: per-bucket lineage + touched + rows_in
+            # one distributed pass: per-bucket lineage + rows_in
             # + (via observe) raw/quarantine counts
             lin_rows = batch.groupBy("bucket").agg(
                 F.min("lsn").alias("lsn_min"),
@@ -175,7 +175,6 @@ class CdcEngine:
                 F.count(F.lit(1)).alias("rows_in"),
                 F.sum(F.when(F.col("op") != "D", 1).otherwise(0)).alias("rows_applied"),
             ).collect()
-            touched = sorted(r["bucket"] for r in lin_rows)
             rows_in = sum(r["rows_in"] for r in lin_rows)
             metrics = obs.get  # collected by the lineage job above
             raw_events, n_quar = metrics["raw"], int(metrics["bad"] or 0)
@@ -195,11 +194,7 @@ class CdcEngine:
                 for r in lin_rows
             ]
             commit = self.sink.apply_batch(
-                batch,
-                epoch_id,
-                quarantine if n_quar else None,
-                lineage_rows,
-                touched=touched,
+                batch, epoch_id, quarantine if n_quar else None, lineage_rows
             )
             if self._rollup is not None and not commit.get("skipped"):
                 self._rollup.refresh(int(epoch_id))

@@ -24,20 +24,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def lww_tiebreak_order(order_col: str = "lsn") -> list:
-    """The LWW sort key: lsn descending, then non-tombstones before
-    tombstones — a genuine event at the same lsn beats a synthetic D.
-    Shared by the batch reducer and the sink's merge-on-read fold so the
-    two can never disagree on a winner."""
-    return [F.col(order_col).desc(), (F.col("op") == "D").asc()]
-
-
 def lww_dedup(
     df: DataFrame,
     keys: tuple[str, ...] = ("conv_id", "turn_idx"),
     order_col: str = "lsn",
 ) -> DataFrame:
-    w = Window.partitionBy(*keys).orderBy(*lww_tiebreak_order(order_col))
+    """One winner per key: highest `order_col`, then non-tombstones before
+    tombstones (a genuine event at the same lsn beats a synthetic D). The
+    one LWW rule: the engine's batch reducer and the sink's merge-on-read
+    fold both call it, so the two can never disagree on a winner."""
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(order_col).desc(), (F.col("op") == "D").asc()
+    )
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

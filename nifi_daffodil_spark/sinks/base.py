@@ -30,13 +30,10 @@ class TranscriptSink(ABC):
         epoch_id: int,
         quarantine: DataFrame | None = None,
         lineage: list[tuple] | None = None,
-        touched: list[int] | None = None,
     ) -> dict:
         """MERGE one deduped batch (unique (conv_id, turn_idx); columns =
         STATE_SCHEMA + op + bucket). `lineage` is a driver-side list of
-        LINEAGE_SCHEMA tuples (already aggregated per bucket). `touched` is
-        the precomputed list of buckets the batch hits (skips a distinct
-        scan when the caller already aggregated per-bucket lineage)."""
+        LINEAGE_SCHEMA tuples (already aggregated per bucket)."""
 
     @abstractmethod
     def read_transcripts(self, as_of_epoch: int | None = None) -> DataFrame:

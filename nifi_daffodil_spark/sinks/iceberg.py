@@ -389,7 +389,6 @@ class IcebergMergeSink(TranscriptSink):
         epoch_id: int,
         quarantine: DataFrame | None = None,
         lineage: list[tuple] | None = None,
-        touched: list[int] | None = None,
     ) -> dict:
         if self.epoch_applied(epoch_id):
             return {"skipped": True, "epoch": epoch_id}

@@ -8,8 +8,9 @@ Design (scale rationale):
     batch rows — it never reads or rewrites existing bucket data, so a hot
     bucket receiving one row per epoch costs one small file per epoch, not a
     full rewrite. Per-bucket state = base snapshot (optional) + delta list;
-    readers fold them with one row_number LWW window (identical semantics to
-    the old write-time merge, locked by the same replay/idempotency tests).
+    readers fold them with `operators.dedup.lww_dedup`, the engine's own
+    batch reducer (identical semantics to the old write-time merge, locked
+    by the same replay/idempotency tests).
   * Compaction is SIZE-TIERED (two levels, LSM-shaped): when a bucket
     accumulates > max_deltas level-0 deltas, apply_batch folds JUST that
     chain into one level-1 run (`data/run-NNNNNN/bucket=K`) — the base is
@@ -20,14 +21,15 @@ Design (scale rationale):
     The LWW fold is associative (winner = max lsn per key), so folding any
     sub-collection first is safe — the same contract Iceberg's
     merge-on-read + rewrite_data_files has.
-  * The manifest maps bucket -> {base, deltas}. Commits are an atomic
+  * The manifest maps bucket -> {base, runs, deltas}. Commits are an atomic
     manifest swap (os.replace), so a crash mid-write leaves only orphan
     files, never a torn table (reference analog: copy-on-write session
-    commit, AbstractDaffodilProcessor.java:479-486).
+    commit, AbstractDaffodilProcessor.java:479-486). `ParquetTable` holds
+    that protocol once; the rollup view (sinks/rollup.py) reuses it.
   * Exactly-once: the manifest records applied epoch ids; re-applying an
     epoch is a no-op (idempotent replay, BASELINE.json:6).
 
-The LWW fold: row_number by (conv_id, turn_idx) over lsn desc, keep rank 1
+The LWW fold: lww_dedup by (conv_id, turn_idx) over lsn desc, keep the winner
 INCLUDING tombstones (a winning delete keeps fencing late smaller-lsn rows).
 State rows carry their commit lsn, so a late batch row with a smaller lsn
 can never overwrite newer state (the `s.lsn > t.lsn` MERGE guard).
@@ -41,11 +43,13 @@ import shutil
 import time
 import uuid
 from contextlib import contextmanager
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nifi_daffodil_spark.operators.dedup import lww_dedup
 from nifi_daffodil_spark.schemas import (
     LINEAGE_SCHEMA,
     QUARANTINE_SCHEMA,
@@ -65,58 +69,40 @@ _FILE_SCHEMA = T.StructType(
 )
 
 
-class ParquetStateSink(TranscriptSink):
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        n_buckets: int = 32,
-        max_deltas: int = 4,
-        max_runs: int = 4,
-    ):
+def bucket_col(n_buckets: int) -> Column:
+    """The table's bucket of each row: pmod(xxhash64(conv_id), n_buckets)."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
+class ParquetTable:
+    """The commit protocol of a bucket-partitioned parquet table under
+    `root` — the state sink and the rollup view share it. `manifest.json`
+    maps bucket ids to the data dirs (`data/<prefix>-NNNNNN/bucket=K`)
+    holding their rows and is replaced atomically; every mutation runs
+    under `_writer_lock`; `_sweep` removes the dirs no manifest entry
+    references. Subclasses set the file schema and the dir prefixes."""
+
+    _SCHEMA: T.StructType
+    _DIR_PREFIXES: tuple[str, ...]
+
+    def __init__(self, spark: SparkSession, root: str, initial: dict):
         self.spark = spark
         self.root = root
-        self.n_buckets = n_buckets
-        # read-amplification bounds: a bucket holding > max_deltas level-0
-        # deltas folds them into one level-1 run at the NEXT epoch that
-        # touches it; > max_runs runs fold (with the base) into a new base
-        self.max_deltas = max_deltas
-        self.max_runs = max_runs
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        os.makedirs(os.path.join(root, "quarantine"), exist_ok=True)
-        os.makedirs(os.path.join(root, "lineage"), exist_ok=True)
-        os.makedirs(os.path.join(root, "layouts"), exist_ok=True)
         if not os.path.exists(self._manifest_path()):
             # ATOMIC-CREATE bootstrap (os.link fails if the target exists):
             # two processes racing a fresh root must not clobber a manifest
-            # the other already committed epochs into — an os.replace here
-            # would erase commit records and reset the dir counter
+            # the other already committed into — an os.replace here would
+            # erase commit records and reset the dir counter
             tmp = self._manifest_path() + f".init-{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
-                json.dump(
-                    {"counter": 0, "buckets": {}, "epochs": {},
-                     "n_buckets": n_buckets},
-                    f, indent=1, sort_keys=True,
-                )
+                json.dump(initial, f, indent=1, sort_keys=True)
             try:
                 os.link(tmp, self._manifest_path())
             except FileExistsError:
                 pass  # another writer bootstrapped first — adopt theirs
             finally:
                 os.remove(tmp)
-        # fail fast on a bucket-count mismatch: pmod(xxhash64(conv_id),
-        # WRONG n) silently mis-prunes point lookups and mis-partitions
-        # writes — the table's recorded count is authoritative, and
-        # reshard() is the sanctioned way to change it. Tables from
-        # before this field adopt the caller's value.
-        recorded = self._read_manifest().get("n_buckets")
-        if recorded is not None and int(recorded) != n_buckets:
-            raise ValueError(
-                f"table at {root} is bucketed with n_buckets="
-                f"{recorded}, but the sink was opened with "
-                f"n_buckets={n_buckets} — open with the recorded count "
-                "or reshard() the table"
-            )
 
     # ---- manifest ---------------------------------------------------------
 
@@ -133,10 +119,28 @@ class ParquetStateSink(TranscriptSink):
             json.dump(m, f, indent=1, sort_keys=True)
         os.replace(tmp, self._manifest_path())  # atomic commit point
 
-    # ---- sink API ---------------------------------------------------------
+    @contextmanager
+    def _writer_lock(self):
+        """ENFORCED single-writer (the parquet analog of the Iceberg sink's
+        snapshot-summary re-check): an exclusive flock on <root>/writer.lock
+        serializes every commit-protocol mutation (epoch apply, refresh,
+        rewrite, vacuum). A concurrent duplicate writer blocks here, then
+        re-reads the manifest and sees its work committed — exactly-once
+        holds under racing writers instead of by documented assumption.
+        Advisory flock is host-local: multi-HOST writers need a real
+        catalog (that is what the Iceberg sink is for)."""
+        import fcntl  # lazy: keeps the module importable (read-only use)
+        # on platforms without fcntl; writers there fail loudly instead of
+        # silently skipping enforcement
 
-    def epoch_applied(self, epoch_id: int) -> bool:
-        return str(epoch_id) in self._read_manifest()["epochs"]
+        with open(os.path.join(self.root, "writer.lock"), "w") as f:
+            fcntl.flock(f, fcntl.LOCK_EX)
+            try:
+                yield
+            finally:
+                fcntl.flock(f, fcntl.LOCK_UN)
+
+    # ---- bucket dirs ------------------------------------------------------
 
     @staticmethod
     def _bucket_dirs(
@@ -160,56 +164,114 @@ class ParquetStateSink(TranscriptSink):
     def _read_buckets(
         self, manifest: dict, buckets: list[int], which: str = "all"
     ) -> DataFrame | None:
-        """RAW state rows of the given buckets: base + every run/delta (a key
-        may appear multiple times — callers needing current state fold with
-        _fold). Bucket dirs may live in different snapshot/run/delta dirs;
-        group by dir so each read keeps partition discovery."""
+        """RAW rows of the given buckets, every dir of each (a key may
+        appear multiple times). Bucket dirs may live in different data
+        dirs; group by dir so each read keeps partition discovery."""
         by_dir: dict[str, list[int]] = {}
         for b in buckets:
             for d in self._bucket_dirs(manifest, b, which):
                 by_dir.setdefault(d, []).append(b)
         if not by_dir:
             return None
-        # recompute the bucket column under the count the MANIFEST records
-        # (not self.n_buckets): a maintenance rewrite serialized behind a
-        # concurrent reshard must re-bucket in the table's current space,
-        # not the stale one this sink instance was opened with
-        n = int(manifest.get("n_buckets") or self.n_buckets)
         parts = []
         for d, bs in by_dir.items():
             base = os.path.join(self.root, "data", d)
             paths = [os.path.join(base, f"bucket={b}") for b in bs]
             parts.append(
-                self.spark.read.option("basePath", base).schema(
-                    _FILE_SCHEMA
-                ).parquet(*paths).withColumn(
-                    "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n)).cast("int")
-                )
+                self.spark.read.option("basePath", base)
+                .schema(self._SCHEMA)
+                .parquet(*paths)
             )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        return reduce(DataFrame.unionByName, parts)
 
-    @staticmethod
-    def _fold(df: DataFrame) -> DataFrame:
-        """Merge-on-read LWW fold: one winner per (conv_id, turn_idx) by
-        highest lsn, tombstones INCLUDED (a winning D keeps fencing late
-        smaller-lsn rows for its key until compact_tombstones reclaims it).
-        At EQUAL lsn a non-tombstone wins (lww_tiebreak_order): genuine
-        lsns never tie, but a retention tombstone fenced at max+1 can
-        collide with the producer's next real lsn — the event must win,
-        deterministically, or reads could flip between compactions."""
-        from nifi_daffodil_spark.operators.dedup import lww_tiebreak_order
+    def _referenced(self, m: dict) -> set[str]:
+        """Every data dir the manifest-shaped `m` references."""
+        return {d for b in m["buckets"] for d in self._bucket_dirs(m, int(b))}
 
-        w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-            *lww_tiebreak_order()
+    def _sweep(
+        self, m: dict, keep_last: int, pinned: set[str] = frozenset()
+    ) -> list[str]:
+        """Remove `<prefix>-NNNNNN` data dirs that neither the manifest `m`
+        nor `pinned` references, older than counter-keep_last. The newest
+        `keep_last` counters are exempt even when unreferenced: a
+        concurrent writer may have written its dir but not yet swapped the
+        manifest. The caller holds _writer_lock."""
+        referenced = self._referenced(m) | pinned
+        removed = []
+        data_dir = os.path.join(self.root, "data")
+        for d in sorted(os.listdir(data_dir)):
+            prefix, _, num = d.partition("-")
+            if (
+                prefix in self._DIR_PREFIXES
+                and d not in referenced
+                and int(num) <= m["counter"] - keep_last
+            ):
+                shutil.rmtree(os.path.join(data_dir, d))
+                removed.append(d)
+        return removed
+
+
+class ParquetStateSink(ParquetTable, TranscriptSink):
+    _SCHEMA = _FILE_SCHEMA
+    _DIR_PREFIXES = ("snap", "delta", "run")
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        n_buckets: int = 32,
+        max_deltas: int = 4,
+        max_runs: int = 4,
+    ):
+        super().__init__(
+            spark, root,
+            {"counter": 0, "buckets": {}, "epochs": {}, "n_buckets": n_buckets},
         )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        self.n_buckets = n_buckets
+        # read-amplification bounds: a bucket holding > max_deltas level-0
+        # deltas folds them into one level-1 run at the NEXT epoch that
+        # touches it; > max_runs runs fold (with the base) into a new base
+        self.max_deltas = max_deltas
+        self.max_runs = max_runs
+        for sub in ("quarantine", "lineage", "layouts"):
+            os.makedirs(os.path.join(root, sub), exist_ok=True)
+        # fail fast on a bucket-count mismatch: pmod(xxhash64(conv_id),
+        # WRONG n) silently mis-prunes point lookups and mis-partitions
+        # writes — the table's recorded count is authoritative, and
+        # reshard() is the sanctioned way to change it. Tables from
+        # before this field adopt the caller's value.
+        recorded = self._read_manifest().get("n_buckets")
+        if recorded is not None and int(recorded) != n_buckets:
+            raise ValueError(
+                f"table at {root} is bucketed with n_buckets="
+                f"{recorded}, but the sink was opened with "
+                f"n_buckets={n_buckets} — open with the recorded count "
+                "or reshard() the table"
+            )
+
+    def _table_n_buckets(self, manifest: dict) -> int:
+        """The bucket count the MANIFEST records (not self.n_buckets): a
+        reader or a maintenance rewrite serialized behind a concurrent
+        reshard must work in the table's current hash space, not the stale
+        one this sink instance was opened with."""
+        return int(manifest.get("n_buckets") or self.n_buckets)
+
+    # ---- sink API ---------------------------------------------------------
+
+    def epoch_applied(self, epoch_id: int) -> bool:
+        return str(epoch_id) in self._read_manifest()["epochs"]
+
+    def _read_buckets(
+        self, manifest: dict, buckets: list[int], which: str = "all"
+    ) -> DataFrame | None:
+        """RAW state rows of the given buckets: base + every run/delta (a key
+        may appear multiple times — callers needing current state fold with
+        lww_dedup), with the bucket column recomputed under the table's
+        recorded count."""
+        df = super()._read_buckets(manifest, buckets, which)
+        if df is None:
+            return None
+        return df.withColumn("bucket", bucket_col(self._table_n_buckets(manifest)))
 
     def _needs_fold(self, manifest: dict, buckets: list[int]) -> bool:
         return any(
@@ -262,34 +324,12 @@ class ParquetStateSink(TranscriptSink):
             if d.startswith("bucket=")
         }
 
-    @contextmanager
-    def _writer_lock(self):
-        """ENFORCED single-writer (the parquet analog of the Iceberg sink's
-        snapshot-summary re-check): an exclusive flock on <root>/writer.lock
-        serializes every commit-protocol mutation (epoch apply, rewrite,
-        vacuum). A concurrent duplicate writer blocks here, then re-reads
-        the manifest and sees the epoch committed — exactly-once holds
-        under racing writers instead of by documented assumption. Advisory
-        flock is host-local: multi-HOST writers need a real catalog (that
-        is what the Iceberg sink is for)."""
-        import fcntl  # lazy: keeps the module importable (read-only use)
-        # on platforms without fcntl; writers there fail loudly instead of
-        # silently skipping enforcement
-
-        with open(os.path.join(self.root, "writer.lock"), "w") as f:
-            fcntl.flock(f, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(f, fcntl.LOCK_UN)
-
     def apply_batch(
         self,
         batch: DataFrame,
         epoch_id: int,
         quarantine: DataFrame | None = None,
         lineage: list[tuple] | None = None,
-        touched: list[int] | None = None,
     ) -> dict:
         """batch columns: conv_id, turn_idx, role, text, tool, ts, lsn, op,
         bucket — already deduped to one row per (conv_id, turn_idx).
@@ -298,9 +338,7 @@ class ParquetStateSink(TranscriptSink):
         Serialized by _writer_lock; the epoch re-check happens INSIDE the
         lock, so two writers racing the same epoch commit exactly once."""
         with self._writer_lock():
-            return self._apply_batch_locked(
-                batch, epoch_id, quarantine, lineage, touched
-            )
+            return self._apply_batch_locked(batch, epoch_id, quarantine, lineage)
 
     def _apply_batch_locked(
         self,
@@ -308,7 +346,6 @@ class ParquetStateSink(TranscriptSink):
         epoch_id: int,
         quarantine: DataFrame | None = None,
         lineage: list[tuple] | None = None,
-        touched: list[int] | None = None,
     ) -> dict:
         t0 = time.monotonic()
         manifest = self._read_manifest()
@@ -332,8 +369,8 @@ class ParquetStateSink(TranscriptSink):
         # compaction (guide §2.6 — independent outputs, and neither job
         # alone keeps every core busy through its tail): the thread is
         # joined BEFORE the manifest commit, so a quarantine failure still
-        # fails the epoch atomically — AND joined in the finally, so a
-        # delta-write/compaction failure cannot release the writer lock
+        # fails the epoch atomically — AND joined on every failure path, so
+        # a delta-write/compaction failure cannot release the writer lock
         # while the quarantine job is still in flight (a retry would
         # otherwise race its dynamic-partition overwrite of the same
         # epoch partition). InheritableThread propagates the JVM-thread-
@@ -369,29 +406,22 @@ class ParquetStateSink(TranscriptSink):
 
                 quar_thread = InheritableThread(target=_quarantine_write)
                 quar_thread.start()
-            if touched is None:
-                batch = batch.persist()
-                touched = sorted(
-                    r["bucket"] for r in batch.select("bucket").distinct().collect()
-                )
             # merge-on-read: APPEND the batch as one delta dir — no read or
             # rewrite of existing bucket data. The batch is already LWW-
             # deduped per key; cross-delta/base conflicts resolve at read
-            # time in _fold (or at compaction below).
+            # time in lww_dedup (or at compaction below). Every batch row is
+            # written, so the buckets that materialized a dir are exactly
+            # the buckets the epoch touched.
             counter = manifest["counter"] + 1
             delta = f"delta-{counter:06d}"
-            written = self._write_partitioned(
+            touched = sorted(self._write_partitioned(
                 batch, os.path.join(self.root, "data", delta),
                 repartition=False,  # engine batches arrive bucket-partitioned
-            )
+            ))
             for b in touched:
-                if b not in written:
-                    continue  # defensive: empty partition never materialized
-                ent = manifest["buckets"].setdefault(
+                manifest["buckets"].setdefault(
                     str(b), {"base": None, "runs": [], "deltas": []}
-                )
-                ent.setdefault("runs", [])
-                ent["deltas"].append(delta)
+                )["deltas"].append(delta)
 
             # size-tiered compaction, level 0 -> 1: fold ONLY the delta
             # chains that exceeded max_deltas into one level-1 run (the base
@@ -400,14 +430,13 @@ class ParquetStateSink(TranscriptSink):
             # never to table size.
             over = [
                 b for b in touched
-                if len(manifest["buckets"].get(str(b), {}).get("deltas", []))
-                > self.max_deltas
+                if len(manifest["buckets"][str(b)]["deltas"]) > self.max_deltas
             ]
             if over:
                 counter += 1
                 run = f"run-{counter:06d}"
                 ran = self._write_partitioned(
-                    self._fold(self._read_buckets(manifest, over, which="deltas")),
+                    lww_dedup(self._read_buckets(manifest, over, which="deltas")),
                     os.path.join(self.root, "data", run),
                     sort=True,
                 )
@@ -429,7 +458,7 @@ class ParquetStateSink(TranscriptSink):
                     counter += 1
                     snap = f"snap-{counter:06d}"
                     compacted = self._write_partitioned(
-                        self._fold(
+                        lww_dedup(
                             self._read_buckets(manifest, over2, which="base_runs")
                         ),
                         os.path.join(self.root, "data", snap),
@@ -471,14 +500,16 @@ class ParquetStateSink(TranscriptSink):
             self._write_manifest(manifest)  # the atomic commit
             return {"skipped": False, "epoch": epoch_id, "snapshot_id": snapshot_id,
                     "buckets": touched}
-        finally:
-            # never leave the quarantine job running past the writer lock:
-            # on failure paths the success-path join above was not reached
-            # (the primary exception propagates; the thread's own error, if
-            # any, was already captured and is secondary)
-            if quar_thread is not None and quar_thread.is_alive():
+        except BaseException as e:
+            # never leave the quarantine job running past the writer lock,
+            # and never lose its error: the primary exception propagates
+            # carrying the quarantine failure as a note. The join stays
+            # unbounded — a timeout would release the lock mid-overwrite.
+            if quar_thread is not None:
                 quar_thread.join()
-            batch.unpersist()
+                if quar_err and quar_err[0] is not e:
+                    e.add_note(f"quarantine write also failed: {quar_err[0]!r}")
+            raise
 
     def _write_lineage(self, rows: list[tuple], snapshot_id: str, epoch_id: int) -> None:
         """Per-partition lineage append — pure pyarrow on the driver (the
@@ -557,9 +588,7 @@ class ParquetStateSink(TranscriptSink):
                 "layout write and manifest swap), or vacuum() expired it"
             )
         missing = {
-            d
-            for b in m["buckets"]
-            for d in self._bucket_dirs(m, int(b))
+            d for d in self._referenced(m)
             if not os.path.isdir(os.path.join(self.root, "data", d))
         }
         if missing:
@@ -589,18 +618,15 @@ class ParquetStateSink(TranscriptSink):
         `VERSION AS OF` analog). Works after later compactions because the
         epoch's layout pins the dirs that existed at commit time; expires
         when vacuum() removes those dirs (like expire_snapshots)."""
-        m = (
-            self._read_manifest()
-            if as_of_epoch is None
-            else self._manifest_as_of(as_of_epoch)
-        )
-        buckets = [int(b) for b in m["buckets"]]
-        df = self._read_buckets(m, buckets)
+        df = self.read_state(as_of_epoch)
         if df is None:
             return self.spark.createDataFrame([], TRANSCRIPT_SCHEMA)
-        if self._needs_fold(m, buckets):  # fast path: compacted table
-            df = self._fold(df)
-        return df.filter(F.col("op") != "D").select(
+        return self._live(df)
+
+    @staticmethod
+    def _live(state: DataFrame) -> DataFrame:
+        """Visible transcript rows of folded state (tombstones dropped)."""
+        return state.filter(F.col("op") != "D").select(
             [f.name for f in TRANSCRIPT_SCHEMA.fields]
         )
 
@@ -616,7 +642,8 @@ class ParquetStateSink(TranscriptSink):
         df = self._read_buckets(m, buckets)
         if df is None:
             return None
-        return self._fold(df) if self._needs_fold(m, buckets) else df
+        # fast path: a compacted table has one dir per bucket, nothing to fold
+        return lww_dedup(df) if self._needs_fold(m, buckets) else df
 
     def read_conversation(self, conv_id: str) -> DataFrame:
         """Point lookup of ONE conversation: prunes to the single hash
@@ -624,24 +651,21 @@ class ParquetStateSink(TranscriptSink):
         pushes the conv_id filter into the parquet scan, where the sorted
         files' row-group stats skip everything else. At 10^10 rows this
         reads one bucket's bounded dir chain, not the table."""
+        m = self._read_manifest()
         b = self.spark.sql(
             "SELECT pmod(xxhash64(?), ?) AS b",
-            args=[conv_id, self.n_buckets],
+            args=[conv_id, self._table_n_buckets(m)],
         ).collect()[0]["b"]
-        m = self._read_manifest()
         df = self._read_buckets(m, [int(b)])
         if df is None:
             return self.spark.createDataFrame([], TRANSCRIPT_SCHEMA)
-        df = self._fold(df.filter(F.col("conv_id") == conv_id))
-        return df.filter(F.col("op") != "D").select(
-            [f.name for f in TRANSCRIPT_SCHEMA.fields]
-        )
+        return self._live(lww_dedup(df.filter(F.col("conv_id") == conv_id)))
 
     def max_lsn(self) -> int | None:
         """Highest committed lsn, computed over the RAW (unfolded) bucket
         union: the fold keeps each key's max-lsn row, so the max is
         identical, and skipping the fold lets the aggregate ride parquet
-        row-group stats instead of a table-wide row_number shuffle."""
+        row-group stats instead of a table-wide LWW-fold shuffle."""
         m = self._read_manifest()
         df = self._read_buckets(m, [int(b) for b in m["buckets"]])
         if df is None:
@@ -669,12 +693,7 @@ class ParquetStateSink(TranscriptSink):
         wanted = [e for e in epochs if after_epoch < e <= to_epoch]
         if not wanted:
             return self.spark.createDataFrame([], _FILE_SCHEMA)
-        dirs = []
-        for e in wanted:
-            ent = m["epochs"][str(e)]
-            # older tables lack the explicit delta field: the snapshot id
-            # is prefixed with the delta dir name (delta-NNNNNN-<uuid5>)
-            dirs.append(ent.get("delta") or "-".join(ent["snapshot_id"].split("-")[:2]))
+        dirs = [m["epochs"][str(e)]["delta"] for e in wanted]
         missing = sorted(
             d for d in set(dirs)
             if not os.path.isdir(os.path.join(self.root, "data", d))
@@ -691,11 +710,9 @@ class ParquetStateSink(TranscriptSink):
             )
             for d in dirs
         ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        df = reduce(DataFrame.unionByName, parts)
         if len(parts) > 1:
-            df = self._fold(df)
+            df = lww_dedup(df)
         # pin the output columns: partition discovery appends a `bucket`
         # column the empty-range branch doesn't have — consumers get ONE
         # stable schema either way
@@ -752,7 +769,7 @@ class ParquetStateSink(TranscriptSink):
                 wanted_b = [b for b in touched if str(b) in lm["buckets"]]
             old = self._read_buckets(lm, [int(b) for b in wanted_b])
             if old is not None:
-                old = self._fold(old)
+                old = lww_dedup(old)
         elif epochs and after_epoch < epochs[0]:
             old = None  # bootstrap: the table was empty before the first commit
         else:
@@ -854,43 +871,33 @@ class ParquetStateSink(TranscriptSink):
         new count, write one snap, swap the manifest atomically.
         Serialized against epoch commits by _writer_lock."""
         with self._writer_lock():
-            self._rewrite_all_locked(new_n_buckets, lsn_horizon)
-
-    def _rewrite_all_locked(
-        self,
-        new_n_buckets: int | None = None,
-        lsn_horizon: int | None = None,
-    ) -> None:
-        m = self._read_manifest()
-        df = self._read_buckets(m, [int(b) for b in m["buckets"]])
-        if df is not None:
-            folded = self._fold(df)  # compacts every delta chain too
-            if lsn_horizon is not None:
-                folded = folded.filter(
-                    ~((F.col("op") == "D") & (F.col("lsn") < lsn_horizon))
+            m = self._read_manifest()
+            df = self._read_buckets(m, [int(b) for b in m["buckets"]])
+            if df is not None:
+                folded = lww_dedup(df)  # compacts every delta chain too
+                if lsn_horizon is not None:
+                    folded = folded.filter(
+                        ~((F.col("op") == "D") & (F.col("lsn") < lsn_horizon))
+                    )
+                if new_n_buckets is not None:
+                    folded = folded.withColumn("bucket", bucket_col(new_n_buckets))
+                counter = m["counter"] + 1
+                snap = f"snap-{counter:06d}"
+                written = self._write_partitioned(
+                    folded, os.path.join(self.root, "data", snap), sort=True
                 )
+                m["buckets"] = {
+                    str(b): {"base": snap, "runs": [], "deltas": []} for b in written
+                }
+                m["counter"] = counter
             if new_n_buckets is not None:
-                folded = folded.withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("conv_id"), F.lit(new_n_buckets)).cast("int"),
-                )
-            counter = m["counter"] + 1
-            snap = f"snap-{counter:06d}"
-            written = self._write_partitioned(
-                folded, os.path.join(self.root, "data", snap), sort=True
-            )
-            m["buckets"] = {
-                str(b): {"base": snap, "runs": [], "deltas": []} for b in written
-            }
-            m["counter"] = counter
-        if new_n_buckets is not None:
-            m["n_buckets"] = new_n_buckets
-            # new hash space: artifacts recorded under different gens must
-            # never be bucket-id-compared (read_changelog's prune guard)
-            m["bucket_gen"] = m.get("bucket_gen", 0) + 1
-        self._write_manifest(m)  # the atomic commit
-        if new_n_buckets is not None:
-            self.n_buckets = new_n_buckets
+                m["n_buckets"] = new_n_buckets
+                # new hash space: artifacts recorded under different gens must
+                # never be bucket-id-compared (read_changelog's prune guard)
+                m["bucket_gen"] = m.get("bucket_gen", 0) + 1
+            self._write_manifest(m)  # the atomic commit
+            if new_n_buckets is not None:
+                self.n_buckets = new_n_buckets
 
     def compact_tombstones(self, lsn_horizon: int) -> None:
         """Reclaim delete tombstones whose lsn is older than the replay
@@ -922,43 +929,21 @@ class ParquetStateSink(TranscriptSink):
         self._rewrite_all(new_n_buckets=new_n_buckets, lsn_horizon=lsn_horizon)
 
     def vacuum(self, keep_last: int = 4) -> list[str]:
-        """Remove snap/delta dirs no bucket references, older than
+        """Remove snap/run/delta dirs no bucket references, older than
         counter-keep_last. The layouts of the last `keep_last` committed
         epochs also pin their dirs, so recent time-travel snapshots survive
         a vacuum; older snapshots whose dirs get removed are expired and
-        their layout files pruned (expire_snapshots semantics).
-        Serialized against commits by _writer_lock (a concurrent epoch's
-        written-but-unswapped dirs could otherwise look unreferenced)."""
+        their layout files pruned (expire_snapshots semantics)."""
         with self._writer_lock():
-            return self._vacuum_locked(keep_last)
-
-    def _vacuum_locked(self, keep_last: int) -> list[str]:
-        m = self._read_manifest()
-        referenced = {
-            d for b in m["buckets"] for d in self._bucket_dirs(m, int(b))
-        }
-        recent_epochs = sorted((int(e) for e in m["epochs"]), reverse=True)[:keep_last]
-        for e in recent_epochs:
-            lm = self._load_layout(e)
-            if lm is None:
-                continue
-            referenced |= {
-                d for b in lm["buckets"] for d in self._bucket_dirs(lm, int(b))
-            }
-        removed = []
-        data_dir = os.path.join(self.root, "data")
-        for d in sorted(os.listdir(data_dir)):
-            if not (
-                d.startswith("snap-")
-                or d.startswith("delta-")
-                or d.startswith("run-")
-            ):
-                continue
-            num = int(d.split("-")[1])
-            if d not in referenced and num <= m["counter"] - keep_last:
-                shutil.rmtree(os.path.join(data_dir, d))
-                removed.append(d)
-        if removed:
-            for e in self.expired_layouts():
-                os.remove(self._layout_path(e))
-        return removed
+            m = self._read_manifest()
+            recent = sorted((int(e) for e in m["epochs"]), reverse=True)
+            pinned = set()
+            for e in recent[:keep_last]:
+                lm = self._load_layout(e)
+                if lm is not None:
+                    pinned |= self._referenced(lm)
+            removed = self._sweep(m, keep_last, pinned)
+            if removed:
+                for e in self.expired_layouts():
+                    os.remove(self._layout_path(e))
+            return removed

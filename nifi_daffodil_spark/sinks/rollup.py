@@ -27,10 +27,11 @@ Scale shape (the reason this exists at 10^10 events):
   * Deltas are combined with the old rollup rows by a union + one grouped
     SUM keyed by conv_id — no join of the changelog back against state
     (that would shuffle |state|), mirroring the graded `cdc_incr_agg` plan.
-  * Commits are an atomic manifest swap (os.replace), same protocol as the
-    sink: a crash mid-refresh leaves an orphan `roll-*` dir, never a torn
-    view, and the retry supersedes it. `vacuum()` reclaims orphans and
-    superseded versions.
+  * The view is a `ParquetTable` like the sink — the same manifest swap,
+    writer lock, bucket-dir reads and sweep, over its own root: a crash
+    mid-refresh leaves an orphan `roll-*` dir, never a torn view, and the
+    retry supersedes it. `vacuum()` reclaims orphans and superseded
+    versions.
   * Refresh is idempotent: the manifest records the epoch the view is
     current to; refreshing to the same (or an older) epoch is a no-op —
     safe to run after every engine epoch.
@@ -43,16 +44,17 @@ documents for lagging consumers.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nifi_daffodil_spark.sinks.parquet_state import ParquetStateSink
+from nifi_daffodil_spark.sinks.parquet_state import (
+    ParquetStateSink,
+    ParquetTable,
+    bucket_col,
+)
 
 ROLLUP_SCHEMA = T.StructType(
     [
@@ -65,100 +67,45 @@ ROLLUP_SCHEMA = T.StructType(
 _COLS = [f.name for f in ROLLUP_SCHEMA.fields]
 
 
-class ConvRollup:
+class ConvRollup(ParquetTable):
+    """The view's manifest maps each bucket id to the ONE `roll-NNNNNN` dir
+    holding its rows. Its writer lock is its own (the sink's does not cover
+    the view): two engines committing different table epochs and then
+    refreshing concurrently would otherwise both write roll-(counter+1)
+    — overwrite-mode jobs deleting each other's part-files mid-write —
+    and swap manifests referencing a torn dir. The loser re-reads the
+    watermark inside the lock and no-ops."""
+
+    _SCHEMA = ROLLUP_SCHEMA
+    _DIR_PREFIXES = ("roll",)
+
     def __init__(self, spark: SparkSession, sink: ParquetStateSink, root: str):
-        self.spark = spark
+        # n_epochs = committed-epoch count at last refresh: an epoch
+        # committed OUT OF ORDER (id below the watermark, e.g.
+        # replay-quarantine into a gap id) is invisible to the
+        # (watermark, to] changelog range, so refresh detects the count
+        # mismatch and rebuilds instead of silently diverging.
+        super().__init__(
+            spark, root,
+            {"epoch": None, "counter": 0, "buckets": {}, "n_epochs": 0,
+             "n_buckets": sink.n_buckets},
+        )
         self.sink = sink
-        self.root = root
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        if not os.path.exists(self._manifest_path()):
-            # n_epochs = committed-epoch count at last refresh: an epoch
-            # committed OUT OF ORDER (id below the watermark, e.g.
-            # replay-quarantine into a gap id) is invisible to the
-            # (watermark, to] changelog range, so refresh detects the count
-            # mismatch and rebuilds instead of silently diverging.
-            # ATOMIC-CREATE (os.link): racing constructors must not clobber
-            # a manifest another writer already committed refreshes into.
-            import uuid
 
-            tmp = self._manifest_path() + f".init-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"epoch": None, "counter": 0, "buckets": {},
-                     "n_epochs": 0, "n_buckets": sink.n_buckets},
-                    f,
-                )
-            try:
-                os.link(tmp, self._manifest_path())
-            except FileExistsError:
-                pass  # another writer bootstrapped first — adopt theirs
-            finally:
-                os.remove(tmp)
-
-    # ---- manifest (same atomic-swap protocol as the sink) -----------------
-
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "manifest.json")
-
-    def _read_manifest(self) -> dict:
-        with open(self._manifest_path()) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_path())
-
-    @contextmanager
-    def _writer_lock(self):
-        """Same enforced single-writer protocol as the sink (its lock does
-        NOT cover the view): two engines committing different table epochs
-        then refreshing concurrently would both write roll-(counter+1) —
-        overwrite-mode jobs deleting each other's part-files mid-write —
-        and swap manifests referencing a torn dir. Serializing refresh and
-        vacuum closes that; the loser re-reads the watermark inside the
-        lock and no-ops."""
-        import fcntl  # lazy: module stays importable on lock-less platforms
-
-        with open(os.path.join(self.root, "writer.lock"), "w") as f:
-            fcntl.flock(f, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(f, fcntl.LOCK_UN)
-
-    # ---- read --------------------------------------------------------------
+    @staticmethod
+    def _bucket_dirs(manifest: dict, b: int, which: str = "all") -> list[str]:
+        """The one dir holding bucket b's rows (a view has no tiers, so
+        every `which` is the same)."""
+        d = manifest["buckets"].get(str(b))
+        return [d] if d else []
 
     def read(self) -> DataFrame:
         """Current rollup rows. Cost: the referenced bucket dirs only."""
         m = self._read_manifest()
-        df = self._read_rollup_buckets(m, [int(b) for b in m["buckets"]])
+        df = self._read_buckets(m, [int(b) for b in m["buckets"]])
         if df is None:
             return self.spark.createDataFrame([], ROLLUP_SCHEMA)
         return df.select(_COLS)
-
-    def _read_rollup_buckets(self, m: dict, buckets: list[int]) -> DataFrame | None:
-        by_dir: dict[str, list[int]] = {}
-        for b in buckets:
-            d = m["buckets"].get(str(b))
-            if d is not None:
-                by_dir.setdefault(d, []).append(b)
-        if not by_dir:
-            return None
-        parts = []
-        for d, bs in by_dir.items():
-            base = os.path.join(self.root, "data", d)
-            paths = [os.path.join(base, f"bucket={b}") for b in bs]
-            parts.append(
-                self.spark.read.option("basePath", base)
-                .schema(ROLLUP_SCHEMA)
-                .parquet(*paths)
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
 
     # ---- refresh -----------------------------------------------------------
 
@@ -207,28 +154,12 @@ class ConvRollup:
             return self._rebuild(to_epoch)
         # touched buckets come from the sink manifest (per-epoch metadata),
         # not a distinct() over the changelog — that would evaluate the
-        # whole delta-vs-as-of-state join once extra just to learn keys.
-        # Epoch entries from older tables may predate the buckets field
-        # (same legacy case read_changes handles); metadata can't answer
-        # then, so fall back to asking the changelog itself.
-        wanted = [e for e in epochs if after < e <= to_epoch]
-        if any("buckets" not in sink_m["epochs"][str(e)] for e in wanted):
-            touched = sorted(
-                r["b"]
-                for r in cl.select(
-                    F.pmod(F.xxhash64("conv_id"), F.lit(self.sink.n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-        else:
-            touched = sorted({
-                int(b)
-                for e in wanted
-                for b in sink_m["epochs"][str(e)].get("buckets", [])
-            })
+        # whole delta-vs-as-of-state join once extra just to learn keys
+        touched = sorted({
+            int(b)
+            for e in epochs if after < e <= to_epoch
+            for b in sink_m["epochs"][str(e)]["buckets"]
+        })
 
         dlen_after = F.coalesce(F.length(F.col("after.text")), F.lit(0)).cast("long")
         dlen_before = F.coalesce(F.length(F.col("before.text")), F.lit(0)).cast("long")
@@ -289,7 +220,7 @@ class ConvRollup:
         contributions, SUM per conv_id, and commit the rewritten buckets.
         One small exchange keyed by conv_id; no join against state.
         touched=None means a full rebuild (every bucket, no old rows)."""
-        bucket = F.pmod(F.xxhash64("conv_id"), F.lit(self.sink.n_buckets)).cast("int")
+        bucket = bucket_col(self.sink.n_buckets)
         contribs = contribs.withColumn("bucket", bucket)
         if touched is None:
             old = None
@@ -304,7 +235,7 @@ class ConvRollup:
                 m["n_buckets"] = self.sink.n_buckets
                 self._write_manifest(m)
                 return {"applied": True, "epoch": to_epoch, "buckets": []}
-            old = self._read_rollup_buckets(m, touched)
+            old = self._read_buckets(m, touched)
         merged = contribs if old is None else contribs.unionByName(
             old.withColumn("bucket", bucket)
         )
@@ -343,8 +274,8 @@ class ConvRollup:
         m["n_buckets"] = self.sink.n_buckets
         self._write_manifest(m)  # the atomic commit
         # O(changed): count only the rewritten dir, never the whole view
-        written = self._read_rollup_buckets(m, [b for b in touched
-                                                if m["buckets"].get(str(b)) == d])
+        written = self._read_buckets(m, [b for b in touched
+                                         if m["buckets"].get(str(b)) == d])
         n_rows = written.count() if written is not None else 0
         return {"applied": True, "epoch": to_epoch, "buckets": touched,
                 "rows_written": n_rows}
@@ -353,21 +284,7 @@ class ConvRollup:
 
     def vacuum(self, keep_last: int = 2) -> list[str]:
         """Remove roll-* dirs the manifest no longer references (superseded
-        versions and orphans from crashed refreshes). The newest
-        `keep_last` counters are exempt even when unreferenced: a
-        CONCURRENT refresh may have fully written its dir but not yet
-        swapped the manifest — deleting it would tear that commit (the
-        same counter-age grace the sink's vacuum applies)."""
+        versions and orphans from crashed refreshes), sparing the newest
+        `keep_last` counters (a concurrent refresh may be in flight)."""
         with self._writer_lock():
-            m = self._read_manifest()
-            referenced = set(m["buckets"].values())
-            removed = []
-            data_dir = os.path.join(self.root, "data")
-            for d in sorted(os.listdir(data_dir)):
-                if not d.startswith("roll-") or d in referenced:
-                    continue
-                if int(d.split("-")[1]) > m["counter"] - keep_last:
-                    continue  # recent enough to be an in-flight commit
-                shutil.rmtree(os.path.join(data_dir, d))
-                removed.append(d)
-            return removed
+            return self._sweep(self._read_manifest(), keep_last)

@@ -127,8 +127,7 @@ def test_sink_parity_quarantine_and_lineage(spark, tmp_path):
         def epoch_applied(self, epoch_id):
             return False
 
-        def apply_batch(self, batch, epoch_id, quarantine=None,
-                        lineage=None, touched=None):
+        def apply_batch(self, batch, epoch_id, quarantine=None, lineage=None):
             if quarantine is not None:
                 self.quarantine = sorted(
                     (r["lsn"], r["raw"], r["error"]) for r in quarantine.collect()

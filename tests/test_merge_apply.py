@@ -507,12 +507,23 @@ def test_apply_after_concurrent_reshard_fails_fast(spark, tmp_path):
             "role string, text string, tool string, ts timestamp",
         )
 
+    convs = [f"c{i}" for i in range(8)]
     sink1 = ParquetStateSink(spark, root, n_buckets=8)
     eng1 = CdcEngine(spark, sink1, EngineConfig(n_buckets=8))
-    eng1.process_batch(_ev([(1, "I", "a", 0, "user", "v1", None, TSX)]), 0)
+    eng1.process_batch(_ev(
+        [(1, "I", "a", 0, "user", "v1", None, TSX)]
+        + [(10 + i, "I", c, 0, "user", f"t{c}", None, TSX)
+           for i, c in enumerate(convs)]), 0)
 
     # maintenance process reshards underneath writer 1
     ParquetStateSink(spark, root, n_buckets=8).reshard(16)
+
+    # the stale instance's point lookups prune by the table's recorded
+    # bucket count, not the one it was opened with
+    fresh = ParquetStateSink(spark, root, n_buckets=16)
+    for c in ["a", *convs]:
+        assert (sink1.read_conversation(c).collect()
+                == fresh.read_conversation(c).collect() != []), c
 
     with pytest.raises(ValueError, match="resharded to n_buckets=16"):
         eng1.process_batch(_ev([(2, "I", "b", 0, "user", "v2", None, TSX)]), 1)
@@ -521,4 +532,31 @@ def test_apply_after_concurrent_reshard_fails_fast(spark, tmp_path):
     eng2 = CdcEngine(spark, sink2, EngineConfig(n_buckets=16))
     assert not eng2.process_batch(
         _ev([(2, "I", "b", 0, "user", "v2", None, TSX)]), 1).skipped
-    assert sink2.read_transcripts().count() == 2
+    assert sink2.read_transcripts().count() == 2 + len(convs)
+
+
+def test_failed_epoch_keeps_the_quarantine_error(spark, tmp_path, monkeypatch):
+    """When the delta write AND the concurrent quarantine write both fail,
+    the raised error names both: the quarantine thread's failure rides on
+    the primary exception instead of being dropped by the join."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    def delta_boom(*a, **kw):
+        raise RuntimeError("delta write boom")
+
+    def quarantine_boom(*a, **kw):
+        raise OSError("quarantine write boom")
+
+    sink = ParquetStateSink(spark, str(tmp_path / "table"), n_buckets=8)
+    quarantine = spark.createDataFrame(
+        [(7, "{}", "bad role")], "lsn long, raw string, error string")
+    monkeypatch.setattr(ParquetStateSink, "_write_partitioned", delta_boom)
+    monkeypatch.setattr(DataFrameWriter, "parquet", quarantine_boom)
+    with pytest.raises(RuntimeError, match="delta write boom") as ei:
+        sink.apply_batch(
+            _events(spark, [(1, "I", "a", 0, "user", "x", None, TS)]), 0,
+            quarantine)
+    notes = " ".join(getattr(ei.value, "__notes__", []))
+    assert "OSError" in notes and "quarantine write boom" in notes
+    assert not sink.epoch_applied(0)

@@ -297,3 +297,35 @@ def test_rollup_legacy_manifest_rebuilds_after_reshard(spark, tmp_path):
     roll.refresh()
     assert roll._read_manifest()["n_buckets"] == 2
     assert _view(roll) == _recompute(eng.sink) == {"a": (1, 6), "b": (1, 2)}
+
+
+def test_concurrent_refreshes_apply_the_range_once(spark, tmp_path):
+    """Two view instances over one root refreshing at the same time: the
+    view's writer lock serializes them, the loser re-reads the watermark
+    inside it and no-ops, and the view stays equal to a recompute."""
+    import threading
+
+    eng, roll = _setup(spark, tmp_path)
+    eng.process_batch(
+        _events(spark, [(1, "I", "a", 0, "user", "hello", None, TS),
+                        (2, "I", "b", 0, "user", "yo", None, TS)]), 0)
+    eng.process_batch(
+        _events(spark, [(3, "U", "a", 0, "user", "hey", None, TS),
+                        (4, "I", "c", 0, "user", "kkk", None, TS)]), 1)
+    rolls = [roll, ConvRollup(spark, eng.sink, str(tmp_path / "rollup"))]
+    start = threading.Barrier(len(rolls))
+    results = {}
+
+    def refresh(i):
+        start.wait()
+        results[i] = rolls[i].refresh()
+
+    threads = [threading.Thread(target=refresh, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert sorted(r["applied"] for r in results.values()) == [False, True], results
+    assert all(r["epoch"] == 1 for r in results.values())
+    assert _view(roll) == _recompute(eng.sink) == {
+        "a": (1, 3), "b": (1, 2), "c": (1, 3)}

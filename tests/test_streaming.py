@@ -159,8 +159,8 @@ class _FaultySink(ParquetStateSink):
     manifest), simulating a driver crash mid-commit."""
 
     def __init__(self, *a, fail_at: str, **kw):
-        # set BEFORE super().__init__: the base ctor writes the bootstrap
-        # manifest through our _write_manifest override
+        # the ctor bootstraps the manifest through os.link, not through the
+        # _write_manifest override below
         self.fail_at = fail_at
         self.tripped = False
         super().__init__(*a, **kw)
@@ -172,8 +172,7 @@ class _FaultySink(ParquetStateSink):
         return super()._write_lineage(rows, snapshot_id, epoch_id)
 
     def _write_manifest(self, m):
-        # trip only on a COMMIT write (an epochs entry present), never the
-        # bootstrap manifest written by __init__
+        # trip only on a COMMIT write (an epochs entry present)
         if self.fail_at == "manifest" and not self.tripped and m.get("epochs"):
             self.tripped = True
             raise RuntimeError("injected crash before manifest swap")
