@@ -71,8 +71,8 @@ def main(argv: list[str] | None = None) -> int:
                          "since-bootstrap)")
     ap.add_argument("--conv-id", default=None,
                     help="--mode read: point lookup — count one "
-                         "conversation's turns via bucket-pruned scan "
-                         "(parquet sink only)")
+                         "conversation's turns, read from its one hash "
+                         "bucket on the driver (parquet sink only)")
     ap.add_argument("--epoch-id", type=int, default=None,
                     help="epoch id for --mode replay-quarantine and "
                          "--mode retention (must be unused; committed ids "

@@ -43,6 +43,7 @@ from nifi_daffodil_spark.operators.dedup import lww_dedup
 from nifi_daffodil_spark.operators.evolution import align_events
 from nifi_daffodil_spark.operators.validate import split_valid, with_validation
 from nifi_daffodil_spark.sinks.base import TranscriptSink
+from nifi_daffodil_spark.sinks.parquet_state import bucket_col
 
 
 @dataclass
@@ -63,6 +64,14 @@ class CdcEngine:
         self.spark = spark
         self.sink = sink
         self.config = config or EngineConfig()
+        # the sink's bucket count partitions its table; a batch bucketed
+        # under another count would land in buckets its lookups never read
+        if self.n_buckets != self.config.n_buckets:
+            raise ValueError(
+                f"EngineConfig(n_buckets={self.config.n_buckets}) does not "
+                f"match the sink's n_buckets={self.n_buckets} — build the "
+                "engine with the sink's bucket count"
+            )
         # bind external variables at engine construction — unknown/invalid
         # bindings fail fast here, the analog of the reference failing the
         # flowfile on a bad variable binding (TestDaffodilProcessor.java:370-449)
@@ -71,6 +80,12 @@ class CdcEngine:
         )
         self.stats: list[EpochStats] = []
         self._rollup = None  # optional maintained view (attach_rollup)
+
+    @property
+    def n_buckets(self) -> int:
+        """The count batches are bucketed under: the sink's (it follows a
+        reshard() of that sink), or the config's for a sink without one."""
+        return getattr(self.sink, "n_buckets", self.config.n_buckets)
 
     # ---- the per-batch pipeline ------------------------------------------
 
@@ -84,7 +99,6 @@ class CdcEngine:
         return batch, quarantine
 
     def _finish_batch(self, valid: DataFrame) -> DataFrame:
-        cfg = self.config
         # ONE full-batch shuffle per epoch, keyed by bucket. The dedup
         # window then partitions by (bucket, conv_id, turn_idx) — a
         # SUPERSET of the exchange key, so Catalyst reuses the bucket
@@ -95,10 +109,10 @@ class CdcEngine:
         # (bucket is a function of conv_id). Dedup/write parallelism =
         # n_buckets — size it to the cluster (SURVEY §4); the skew unit
         # stays one (conv, turn) inside a bucket partition, and the
-        # Iceberg sink still salts its own MERGE source.
+        # Iceberg sink still salts its own MERGE source. The count is the
+        # sink's, read per batch (see n_buckets).
         tagged = valid.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(cfg.n_buckets)).cast("int"),
+            "bucket", bucket_col(self.n_buckets)
         ).repartition("bucket")
         deduped = lww_dedup(tagged, keys=("bucket", "conv_id", "turn_idx"))
         # after dedup, before anything else: normalize only winners
@@ -157,13 +171,13 @@ class CdcEngine:
         # events first), so both passes see identical rows. The observe()
         # metrics are collected by the FIRST action (the lineage agg pass)
         # and are not re-collected by the quarantine pass.
-        validated = with_validation(ev, cfg.validation_mode, cfg.max_text_len)
-        obs = Observation(f"epoch-{epoch_id}")
-        validated = validated.observe(
-            obs,
+        checked = with_validation(ev, cfg.validation_mode, cfg.max_text_len)
+        counts = (
             F.count(F.lit(1)).alias("raw"),
             F.sum(F.when(F.col("_error").isNotNull(), 1).otherwise(0)).alias("bad"),
         )
+        obs = Observation(f"epoch-{epoch_id}")
+        validated = checked.observe(obs, *counts)
         valid, quarantine = split_valid(validated)
         batch = self._finish_batch(valid).persist()
         try:
@@ -176,7 +190,11 @@ class CdcEngine:
                 F.sum(F.when(F.col("op") != "D", 1).otherwise(0)).alias("rows_applied"),
             ).collect()
             rows_in = sum(r["rows_in"] for r in lin_rows)
-            metrics = obs.get  # collected by the lineage job above
+            # collected by the lineage job above — unless the batch is
+            # empty: then adaptive execution may replace the observed scan
+            # with an empty relation and the observation never arrives, so
+            # an epoch without a valid row counts its input itself
+            metrics = obs.get if lin_rows else checked.agg(*counts).first()
             raw_events, n_quar = metrics["raw"], int(metrics["bad"] or 0)
             wall_so_far = int((time.monotonic() - t0) * 1000)
             lineage_rows = [

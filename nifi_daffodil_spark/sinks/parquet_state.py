@@ -28,6 +28,10 @@ Design (scale rationale):
     that protocol once; the rollup view (sinks/rollup.py) reuses it.
   * Exactly-once: the manifest records applied epoch ids; re-applying an
     epoch is a no-op (idempotent replay, BASELINE.json:6).
+  * Point lookups (read_conversation) run on the driver: a Python XXH64
+    names the bucket, pyarrow reads its chain and `lww_dedup_arrow` folds
+    it — one conversation's rows cost less than one Spark job's dispatch.
+    Table-sized reads, compaction and reshard fold in Spark.
 
 The LWW fold: lww_dedup by (conv_id, turn_idx) over lsn desc, keep the winner
 INCLUDING tombstones (a winning delete keeps fencing late smaller-lsn rows).
@@ -40,16 +44,19 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import struct
 import time
 import uuid
 from contextlib import contextmanager
 from functools import reduce
 
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from nifi_daffodil_spark.operators.dedup import lww_dedup
+from nifi_daffodil_spark.operators.dedup import lww_dedup, lww_dedup_arrow
 from nifi_daffodil_spark.schemas import (
     LINEAGE_SCHEMA,
     QUARANTINE_SCHEMA,
@@ -69,9 +76,74 @@ _FILE_SCHEMA = T.StructType(
 )
 
 
+#: the file columns as Arrow types, for driver-side reads of the table
+_ARROW_FILE_SCHEMA = to_arrow_schema(_FILE_SCHEMA)
+# Spark writes `ts` as INT96 (UTC instants); read it at Spark's microsecond
+# resolution so every TimestampType value round-trips
+_PARQUET_FORMAT = ds.ParquetFileFormat(
+    read_options={"coerce_int96_timestamp_unit": "us"}
+)
+
+
 def bucket_col(n_buckets: int) -> Column:
     """The table's bucket of each row: pmod(xxhash64(conv_id), n_buckets)."""
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of `data` as a signed 64-bit int — Spark's `xxhash64` of a
+    string column hashes its UTF-8 bytes exactly like this (seed 42)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i <= n - 32:
+            v = [_xxh64_round(a, x)
+                 for a, x in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh64_round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h ^= _xxh64_round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i <= n - 4:
+        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h ^= byte * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def bucket_of(conv_id: str, n_buckets: int) -> int:
+    """`bucket_col`'s value for one key, on the driver: Python's % of a
+    positive modulus is Spark's pmod."""
+    return _xxhash64(conv_id.encode("utf-8")) % n_buckets
 
 
 class ParquetTable:
@@ -646,20 +718,33 @@ class ParquetStateSink(ParquetTable, TranscriptSink):
         return lww_dedup(df) if self._needs_fold(m, buckets) else df
 
     def read_conversation(self, conv_id: str) -> DataFrame:
-        """Point lookup of ONE conversation: prunes to the single hash
-        bucket that can hold it (same pmod(xxhash64) the writer used) and
-        pushes the conv_id filter into the parquet scan, where the sorted
-        files' row-group stats skip everything else. At 10^10 rows this
-        reads one bucket's bounded dir chain, not the table."""
+        """Point lookup of ONE conversation, served on the driver without a
+        Spark job: `bucket_of` names the one hash bucket that can hold it
+        (under the manifest's bucket count), a pyarrow scan reads that
+        bucket's base -> runs -> deltas files with the conv_id filter
+        pushed into the scan (the sorted compaction outputs' row-group
+        stats skip everything else), `lww_dedup_arrow` folds the rows and
+        tombstones are dropped. The result is a local DataFrame in
+        TRANSCRIPT_SCHEMA. A lookup's cost is one bucket's bounded dir
+        chain and one conversation's rows, whatever the table's size; a
+        Spark job would cost more in dispatch than the rows do."""
         m = self._read_manifest()
-        b = self.spark.sql(
-            "SELECT pmod(xxhash64(?), ?) AS b",
-            args=[conv_id, self._table_n_buckets(m)],
-        ).collect()[0]["b"]
-        df = self._read_buckets(m, [int(b)])
-        if df is None:
-            return self.spark.createDataFrame([], TRANSCRIPT_SCHEMA)
-        return self._live(lww_dedup(df.filter(F.col("conv_id") == conv_id)))
+        b = bucket_of(conv_id, self._table_n_buckets(m))
+        files = []
+        for d in self._bucket_dirs(m, b):
+            path = os.path.join(self.root, "data", d, f"bucket={b}")
+            files += [
+                os.path.join(path, name)
+                for name in sorted(os.listdir(path))
+                if not name.startswith((".", "_"))  # Hadoop's hidden files
+            ]
+        rows = ds.dataset(
+            files, schema=_ARROW_FILE_SCHEMA, format=_PARQUET_FORMAT
+        ).to_table(filter=ds.field("conv_id") == conv_id)
+        live = lww_dedup_arrow(rows).filter(ds.field("op") != "D")
+        return self.spark.createDataFrame(
+            live.select(TRANSCRIPT_SCHEMA.fieldNames()), TRANSCRIPT_SCHEMA
+        )
 
     def max_lsn(self) -> int | None:
         """Highest committed lsn, computed over the RAW (unfolded) bucket

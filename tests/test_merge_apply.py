@@ -329,27 +329,95 @@ def test_compacted_files_sorted_for_data_skipping(spark, tmp_path):
         assert keys == sorted(keys), f
 
 
-def test_read_conversation_pruned_point_lookup(spark, tmp_path):
-    """read_conversation must equal the filtered full read AND only scan
-    the one bucket that can hold the key (pushed filter included)."""
+def test_read_conversation_pruned_point_lookup(spark, tmp_path, monkeypatch):
+    """read_conversation must equal the filtered full read, open only the
+    files of the one bucket that can hold the key, filter inside the
+    pyarrow scan, and start no Spark job when collected."""
+    import re
+
+    from nifi_daffodil_spark.sinks import parquet_state
+
     eng = _engine(spark, tmp_path)
     rows = [
-        (i, "I", f"c{i % 17:02d}", i // 17, "user", f"t{i}", None, TS)
+        (i, "I", f"c{i % 17:02d}", i // 17, "user", f"t{i}",
+         None if i % 2 else "search", TS + dt.timedelta(microseconds=i))
         for i in range(200)
     ]
     eng.process_batch(_events(spark, rows), epoch_id=0)
-    got = eng.sink.read_conversation("c05")
-    full = eng.sink.read_transcripts().filter("conv_id = 'c05'")
-    assert sorted((r["conv_id"], r["turn_idx"], r["text"]) for r in got.collect()) \
-        == sorted((r["conv_id"], r["turn_idx"], r["text"]) for r in full.collect())
-    # only ONE bucket dir feeds the plan, and the filter reached parquet
-    import re
-    buckets = {m for f in got.inputFiles() for m in re.findall(r"bucket=(\d+)", f)}
-    assert len(buckets) == 1, buckets
-    analyzed = got._jdf.queryExecution().toString()
-    assert "EqualTo(conv_id,c05)" in analyzed
+
+    scans = []
+    real_dataset = parquet_state.ds.dataset
+
+    class _Spy:
+        def __init__(self, files, **kw):
+            self.files, self._ds = list(files), real_dataset(files, **kw)
+
+        def to_table(self, **kw):
+            self.filter = kw.get("filter")
+            return self._ds.to_table(**kw)
+
+    def spy(files, **kw):
+        scans.append(_Spy(files, **kw))
+        return scans[-1]
+
+    monkeypatch.setattr(parquet_state.ds, "dataset", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("point-lookup", "read_conversation + collect")
+    try:
+        got = eng.sink.read_conversation("c05").collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("point-lookup")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    full = eng.sink.read_transcripts().filter("conv_id = 'c05'").collect()
+    assert len(full) == 12 and sorted(got) == sorted(full)
+    # only ONE bucket's files were opened, and the filter ran in the scan
+    (scan,) = scans
+    buckets = {b for f in scan.files for b in re.findall(r"bucket=(\d+)", f)}
+    assert scan.files and len(buckets) == 1, scan.files
+    assert str(scan.filter) == '(conv_id == "c05")'
     # a conv that hashes elsewhere must not be served from this bucket
     assert eng.sink.read_conversation("no-such-conv").count() == 0
+
+
+def test_engine_bucket_count_follows_the_sink(spark, tmp_path):
+    """An engine whose config names another bucket count than its sink is
+    refused at construction; an engine built before a reshard() of its
+    own sink buckets later batches under the sink's new count, so point
+    lookups find their rows."""
+    import pytest
+
+    sink = ParquetStateSink(spark, str(tmp_path / "table"), n_buckets=4)
+    with pytest.raises(ValueError, match=r"n_buckets=8\).*n_buckets=4"):
+        CdcEngine(spark, sink, EngineConfig(n_buckets=8))
+    eng = CdcEngine(spark, sink, EngineConfig(n_buckets=4))
+    eng.process_batch(_events(spark, [(1, "I", "a", 0, "user", "v1", None, TS)]), 0)
+    sink.reshard(16)
+    convs = [f"c{i}" for i in range(12)]
+    eng.process_batch(_events(spark, [
+        (10 + i, "I", c, 0, "user", f"t{c}", None, TS)
+        for i, c in enumerate(convs)]), 1)
+    for c in convs:
+        assert [r["text"] for r in sink.read_conversation(c).collect()] == [f"t{c}"], c
+
+
+def test_all_bad_epoch_commits_nothing_and_quarantines(spark, tmp_path):
+    """An epoch whose every row fails validation commits 0 rows and
+    quarantines its input — an in-memory input included, whose empty
+    batch once lost the epoch's observed counts."""
+    eng = _engine(spark, tmp_path)
+    st = eng.process_batch(
+        _events(spark, [(1, "I", "a", 0, "wizard", "x", None, TS)]), 0)
+    assert (st.skipped, st.rows_in, st.rows_applied, st.rows_quarantined,
+            st.extra["raw_events"]) == (False, 0, 0, 1, 1)
+    assert eng.sink.epoch_applied(0)
+    assert eng.sink.read_transcripts().count() == 0
+    assert eng.sink.read_changes(-1).count() == 0
+    (q,) = eng.sink.read_quarantine().collect()
+    assert (q["lsn"], q["error"], q["epoch"]) == (1, "BAD_ROLE", 0)
+    # the table goes on taking epochs
+    eng.process_batch(_events(spark, [(2, "I", "a", 0, "user", "ok", None, TS)]), 1)
+    assert [r["text"] for r in eng.sink.read_conversation("a").collect()] == ["ok"]
 
 
 def test_retention_expires_stale_conversations(spark, tmp_path):
