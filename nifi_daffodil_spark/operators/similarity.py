@@ -4,12 +4,13 @@
     matmul inside mapInPandas, local top-k under the final (cos desc,
     vec_id) order, one small global merge. IVF serving reuses it on the
     probed cells.
-  * IVF (ivf_train_centroids / ivf_assign / ivf_topk, and the persisted
-    IvfIndex) — the ANN path: a seeded k-means coarse quantizer, vectors
-    stored by cell, and a query scans only its nprobe nearest cells.
+  * IVF (ivf_train_centroids / ivf_assign and the persisted IvfIndex) — the
+    ANN path: a seeded k-means coarse quantizer, vectors stored by cell,
+    and a query scans only its nprobe nearest cells.
   * srp_lsh_pairs — all-pairs near-dup candidates via banded
     sign-random-projection LSH over md5-derived hyperplanes (portable to
-    the DuckDB oracle), exact-cosine verified.
+    the DuckDB oracle): one Arrow bucket kernel emits each candidate pair
+    once, from its lowest colliding band, with its exact cosine.
 """
 
 from __future__ import annotations
@@ -18,10 +19,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _norm_col(v: str = "v"):
-    return F.sqrt(F.aggregate(F.col(v), F.lit(0.0), lambda a, x: a + x * x))
 
 
 def as_double_vecs(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -111,24 +108,6 @@ def ivf_train_centroids(
     return cents
 
 
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    centroids: "np.ndarray",
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """ANN: exact cosine top-k over only the nprobe IVF cells nearest the
-    query — candidate set is cell-sized, work ~ nprobe/n_cells of the data."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    probes = [int(c) for c in (cn @ qn).argsort()[::-1][:nprobe]]
-    cells = ivf_assign(df, centroids)
-    cand = cells.filter(F.col("cell").isin(probes))
-    return brute_force_topk_arrow(cand.select("vec_id", "v"), query_vec, k)
-
-
 def srp_coefficients(n_bits: int, dim: int) -> list[list[float]]:
     """Deterministic ±1 hyperplane coefficients derived from md5(bit:dim).
 
@@ -155,164 +134,48 @@ def srp_lsh_pairs(
     min_cos: float | None = None,
 ) -> DataFrame:
     """Near-dup candidate PAIRS via banded sign-random-projection LSH,
-    exact-cosine verified — the scale-safe shape for all-pairs similarity.
+    exact-cosine verified, with no cartesian product and no join.
 
-    No cartesian product anywhere: vectors sharing any (band, key) bucket
-    become candidates through an equality hash-join; exact cosine runs only
-    on candidates. At corpus scale the candidate count is sum over buckets
-    of |bucket|^2 — sublinear in n^2 whenever the target similarity is high
-    enough that bands are selective (the standard LSH s-curve
-    P(candidate) = 1-(1-p^r)^b with p = 1 - theta/pi). For harder, lower
-    thresholds raise n_bands.
+    Two vectors are candidates when their `rows_per_band` sign bits agree
+    in at least one of `n_bands` bands: the standard LSH s-curve
+    P(candidate) = 1-(1-p^r)^b with p = 1 - theta/pi. For lower target
+    similarities raise n_bands.
 
-    min_cos=None (default): built-in Catalyst expressions — normalize once,
-    one fold per bit (dim multiply-adds over array literals), band keys
-    packed to ints, one shuffle on (band, key) — and EVERY candidate pair is
-    returned with its exact cosine (caller thresholds / top-ks).
+    The plan is MapInArrow -> explode -> one exchange -> FlatMapGroupsInArrow:
+      1. mapInArrow normalizes each vector and packs its n_bands *
+         rows_per_band sign bits into one `sig` long (bit q is hyperplane
+         q): one row per vector crosses the Python boundary.
+      2. JVM-side explode: band j's key is (sig >> j*r) & (2^r - 1).
+      3. groupBy(band, key).applyInArrow: a bucket emits its pairs d1 < d2
+         whose LOWEST colliding band is its own, i.e. every r-bit chunk of
+         sig_a ^ sig_b below band j is nonzero. Each candidate pair thus
+         leaves exactly one bucket, and no distinct() follows.
+    Every emitted pair carries its exact left-fold cosine (_fold_dot),
+    bit-identical to DuckDB's list_dot_product over the normalized vectors.
 
-    min_cos given: the THRESHOLD-PUSHDOWN path (optimization round 6).
-    Semantically identical up to the returned pair set being pre-filtered to
-    cos >= min_cos; callers that filter at the same threshold get the exact
-    same rows. The shape problem it fixes: with rows_per_band=2 each band
-    has only 4 possible keys, so the Catalyst candidate join degenerates to
-    ~all-pairs through a 64-key skewed shuffle, materializes O(n^2) distinct
-    candidate rows, joins the vectors back twice, and folds the cosine
-    per-pair in interpreted HigherOrderFunctions — measured 839 s at the
-    driver's sf=1.0 (BENCH_r05). Instead, each (band, key) bucket is handled
-    by one Arrow task: a numpy matmul screens the bucket's pair block
-    against (min_cos - 1e-6), and ONLY screened survivors get the exact
-    left-fold cosine (bit-identical to the Catalyst/DuckDB fold: the
-    per-element accumulate runs in the same IEEE order, vectorized ACROSS
-    pairs, not within) and the exact >= filter. Survivor counts are
-    O(near-dups), so nothing quadratic is ever shuffled or distinct'd.
-    Guard-band soundness: dgemm error for dim<=4096 unit vectors is < 1e-12,
-    five orders below the 1e-6 guard, so the screen can only ADMIT extra
-    pairs for the exact filter to reject, never drop a qualifying pair.
-
-    Input df: (vec_id long, v array<double>). Returns (d1, d2, cos).
-    """
-    n_bits = n_bands * rows_per_band
-    coefs = srp_coefficients(n_bits, dim)
-    if min_cos is not None:
-        return _srp_lsh_pairs_thresholded(
-            df, dim, n_bands, rows_per_band, coefs, float(min_cos)
-        )
-    nrm = _norm_col()
-    en = df.select(
-        "vec_id", F.transform(F.col("v"), lambda x: x / nrm).alias("u")
-    )
-
-    def _bit(q: int):
-        proj = F.aggregate(
-            F.zip_with(
-                F.col("u"),
-                F.array(*[F.lit(c) for c in coefs[q]]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    band_keys = [
-        sum(
-            (_bit(j * rows_per_band + i) * F.lit(1 << i) for i in range(rows_per_band)),
-            F.lit(0),
-        ).alias(f"k{j}")
-        for j in range(n_bands)
-    ]
-    # Reused three times (band keys + two verification joins). Eager
-    # localCheckpoint, not persist(): persist leaked cached blocks for the
-    # session lifetime across repeated calls (bench warm+timed, tests);
-    # checkpoint blocks are dropped by the ContextCleaner as soon as the
-    # result DataFrame is garbage-collected. Lineage truncation is fine —
-    # the input is a deterministic scan.
-    en = en.localCheckpoint(eager=True)
-    keyed = en.select("vec_id", *band_keys)
-    # bands carry only (vec_id, band, key): the 64-double vector must NOT be
-    # exploded x n_bands through the shuffle — it is joined back below, once,
-    # after candidate dedup
-    bands = keyed.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("band"), F.col(f"k{j}").alias("key"))
-                    for j in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = bands.select(F.col("vec_id").alias("d1"), "band", "key")
-    b = bands.select(
-        F.col("vec_id").alias("d2"),
-        F.col("band").alias("band2"),
-        F.col("key").alias("key2"),
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("band") == F.col("band2"))
-            & (F.col("key") == F.col("key2"))
-            & (F.col("d1") < F.col("d2")),
-        )
-        .select("d1", "d2")
-        .distinct()
-    )
-    u1 = en.select(F.col("vec_id").alias("d1"), F.col("u").alias("u1"))
-    u2 = en.select(F.col("vec_id").alias("d2"), F.col("u").alias("u2"))
-    cos = F.aggregate(
-        F.zip_with(F.col("u1"), F.col("u2"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a_, x: a_ + x,
-    )
-    return (
-        cand.join(u1, "d1").join(u2, "d2").select("d1", "d2", cos.alias("cos"))
-    )
-
-
-def _fold_dot(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
-    """Row-wise dot product in EXACT left-fold order: acc starts at 0.0 and
-    accumulates a[:, k] * b[:, k] element-index by element-index — the same
-    IEEE operation sequence as Catalyst's aggregate(zip_with(u1, u2, *),
-    0.0, +) and DuckDB's list_dot_product, vectorized across rows (which
-    does not change any single row's op order). Bit-identical results."""
-    acc = np.zeros(a.shape[0], dtype=np.float64)
-    for k in range(a.shape[1]):
-        acc += a[:, k] * b[:, k]
-    return acc
-
-
-def _srp_lsh_pairs_thresholded(
-    df: DataFrame,
-    dim: int,
-    n_bands: int,
-    rows_per_band: int,
-    coefs: list[list[float]],
-    min_cos: float,
-) -> DataFrame:
-    """Threshold-pushdown SRP-LSH (see srp_lsh_pairs docstring, min_cos arm).
-
-    Stage 1 (mapInArrow): normalize + sign bits + one band-key column per
-    band, all in the exact left-fold order of the Catalyst path — ONE row
-    per vector (vec_id, u, one key per band) crosses the Python boundary.
-    Stage 2 (JVM): explode the band keys into (band, key, vec_id, u) rows.
-    Stage 3 (groupBy(band, key).applyInArrow): per-bucket pair generation —
-    matmul screen at min_cos - 1e-6 (admits, never drops), exact left-fold
-    cosine + exact >= min_cos on screened survivors only.
-    Then one distinct() over the (tiny) surviving pair set, mirroring the
-    candidate distinct of the Catalyst path (same pair found via several
-    bands carries the identical cosine).
+    min_cos=None returns every candidate pair. min_cos given returns only
+    pairs with cos >= min_cos: a numpy matmul screens each bucket's pair
+    block at min_cos - 1e-6 first, so only survivors get the exact fold.
+    dgemm error for dim<=4096 unit vectors is < 1e-12, five orders below
+    the guard, so the screen can only admit extra pairs for the exact
+    filter to reject, never drop a qualifying one.
 
     NaN handling mirrors Spark/DuckDB comparison semantics (NaN compares
-    greater than any value, so a NaN cosine passes >= min_cos): screens and
-    filters keep NaN rows. Only reachable with zero-norm input vectors.
+    greater than any value): a NaN projection is a 1 bit and a NaN cosine
+    passes >= min_cos. Only zero-norm input vectors reach it.
+
+    Input df: (vec_id long, v array<double>). Returns (d1, d2, cos).
     """
     import pyarrow as pa
 
     n_bits = n_bands * rows_per_band
-    cmat = np.asarray(coefs, dtype=np.float64)  # (n_bits, dim)
-    guard = min_cos - 1e-6
+    if n_bits > 63:
+        raise ValueError(
+            f"n_bands * rows_per_band = {n_bits} sign bits; the packed sig "
+            "is a signed long and holds at most 63"
+        )
+    cmat = np.asarray(srp_coefficients(n_bits, dim), dtype=np.float64)
+    r = rows_per_band
 
     def _vecs(col: "pa.ChunkedArray | pa.Array") -> "np.ndarray":
         """Arrow list<double> column -> (n, dim) float64 matrix without
@@ -327,7 +190,7 @@ def _srp_lsh_pairs_thresholded(
         )
         return pa.ListArray.from_arrays(offsets, pa.array(m.ravel()))
 
-    def keys_part(it):
+    def sig_part(it):
         for rb in it:
             if rb.num_rows == 0:
                 continue
@@ -335,46 +198,28 @@ def _srp_lsh_pairs_thresholded(
             nrm = np.sqrt(_fold_dot(m, m))
             with np.errstate(divide="ignore", invalid="ignore"):
                 u = m / nrm[:, None]
-            # sign bits, fold order per bit; NaN proj >= 0 is TRUE in Spark
-            bits = np.empty((len(u), n_bits), dtype=np.int64)
+            sig = np.zeros(len(u), dtype=np.int64)
             for q in range(n_bits):
                 proj = _fold_dot(u, np.broadcast_to(cmat[q], u.shape))
-                bits[:, q] = (proj >= 0) | np.isnan(proj)
-            keys = []
-            for j in range(n_bands):
-                key = np.zeros(len(u), dtype=np.int64)
-                for i in range(rows_per_band):
-                    key += bits[:, j * rows_per_band + i] << i
-                keys.append(pa.array(key))
-            # ONE row per vector across the Python boundary (u once, not
-            # x n_bands); the band explode happens JVM-side below, so the
-            # Arrow transfer is ~n_bands x smaller than emitting exploded
-            # rows here
+                sig |= ((proj >= 0) | np.isnan(proj)).astype(np.int64) << q
             yield pa.RecordBatch.from_arrays(
-                [rb.column(0), _list_col(u), *keys],
-                names=["vec_id", "u", *[f"k{j}" for j in range(n_bands)]],
+                [rb.column(0), _list_col(u), pa.array(sig)], names=["vec_id", "u", "sig"]
             )
 
-    key_schema = ", ".join(f"k{j} long" for j in range(n_bands))
-    with_keys = df.select("vec_id", "v").mapInArrow(
-        keys_part, schema=f"vec_id long, u array<double>, {key_schema}"
+    with_sig = df.select("vec_id", "v").mapInArrow(
+        sig_part, schema="vec_id long, u array<double>, sig long"
     )
-    keyed = with_keys.select(
-        "vec_id",
-        "u",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("long").alias("band"),
-                        F.col(f"k{j}").alias("key"),
-                    )
-                    for j in range(n_bands)
-                ]
+    band_keys = F.array(
+        *[
+            F.struct(
+                F.lit(j).cast("long").alias("band"),
+                F.shiftright("sig", j * r).bitwiseAND(F.lit((1 << r) - 1)).alias("key"),
             )
-        ).alias("bk"),
-    ).select(
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"), "vec_id", "u"
+            for j in range(n_bands)
+        ]
+    )
+    keyed = with_sig.select(F.explode(band_keys).alias("bk"), "vec_id", "u", "sig").select(
+        "bk.band", "bk.key", "vec_id", "u", "sig"
     )
 
     _empty = pa.table(
@@ -385,29 +230,44 @@ def _srp_lsh_pairs_thresholded(
         }
     )
 
-    def bucket_pairs(tbl: "pa.Table") -> "pa.Table":
+    def bucket_pairs(key, tbl):
         n = tbl.num_rows
         if n < 2:
             return _empty
+        # one bit per lower band, at its chunk's lowest position
+        lower = sum(1 << (i * r) for i in range(key[0].as_py()))
         u = _vecs(tbl.column("u"))
-        ids = tbl.column("vec_id").to_numpy(zero_copy_only=False)
+        ids = tbl.column("vec_id").to_numpy()
+        sig = tbl.column("sig").to_numpy()
         d1o, d2o, coso = [], [], []
-        block = max(1, 64_000_000 // (8 * n))  # ~64 MB per score block
+        # bounds a block's gathered pair vectors (rows x n x dim) at ~32 MB
+        block = max(1, 4_000_000 // (n * u.shape[1]))
         for lo in range(0, n, block):
             hi = min(lo + block, n)
-            scores = u[lo:hi] @ u.T  # screen only; never emitted
-            keep = (scores >= guard) | np.isnan(scores)
             # strict id ordering d1 < d2 (each unordered pair once)
-            keep &= ids[lo:hi, None] < ids[None, :]
+            keep = ids[lo:hi, None] < ids[None, :]
+            if lower:
+                # OR each r-bit chunk of sig_a ^ sig_b into its lowest bit:
+                # the pair stays only if every lower band's chunk differs
+                x = sig[lo:hi, None] ^ sig[None, :]
+                y = x
+                for s in range(1, r):
+                    y = y | (x >> s)
+                keep &= (y & lower) == lower
+            if min_cos is not None:
+                scores = u[lo:hi] @ u.T  # screen only; never emitted
+                keep &= (scores >= min_cos - 1e-6) | np.isnan(scores)
             bi, bj = np.nonzero(keep)
             if not len(bi):
                 continue
             gi = bi + lo
-            cos = _fold_dot(u[gi], u[bj])  # exact left-fold, survivors only
-            ok = (cos >= min_cos) | np.isnan(cos)
-            d1o.append(ids[gi][ok])
-            d2o.append(ids[bj][ok])
-            coso.append(cos[ok])
+            cos = _fold_dot(u[gi], u[bj])
+            if min_cos is not None:
+                ok = (cos >= min_cos) | np.isnan(cos)
+                gi, bj, cos = gi[ok], bj[ok], cos[ok]
+            d1o.append(ids[gi])
+            d2o.append(ids[bj])
+            coso.append(cos)
         if not d1o:
             return _empty
         return pa.table(
@@ -418,15 +278,26 @@ def _srp_lsh_pairs_thresholded(
             }
         )
 
-    pairs = keyed.groupBy("band", "key").applyInArrow(
+    return keyed.groupBy("band", "key").applyInArrow(
         bucket_pairs, schema="d1 long, d2 long, cos double"
     )
-    return pairs.distinct()
+
+
+def _fold_dot(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
+    """Row-wise dot product in EXACT left-fold order: acc starts at 0.0 and
+    accumulates a[:, k] * b[:, k] element-index by element-index — the same
+    IEEE operation sequence as DuckDB's list_dot_product and a Catalyst
+    aggregate(zip_with(u1, u2, *), 0.0, +), vectorized across rows (which
+    does not change any single row's op order). Bit-identical results."""
+    acc = np.zeros(a.shape[0], dtype=np.float64)
+    for k in range(a.shape[1]):
+        acc += a[:, k] * b[:, k]
+    return acc
 
 
 class IvfIndex:
-    """Persisted IVF index: build ONCE, serve many queries (round-2 verdict
-    item #4 — ivf_topk retrained the quantizer and re-assigned every call).
+    """Persisted IVF index: build ONCE, serve many queries (the quantizer is
+    trained and every vector assigned once, at build time).
 
     Layout (all parquet, self-describing):
       <path>/centroids/   (cell long, c array<double>)      — tiny, k rows

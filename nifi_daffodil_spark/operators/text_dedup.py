@@ -80,9 +80,8 @@ def jaccard_pairs(
         # candidate gen + sets below reference `shingles` 3-4x; eager
         # localCheckpoint (not persist — persisted blocks leak for the
         # session lifetime across repeated calls; checkpoint blocks are
-        # dropped by the ContextCleaner once the result is GC'd, same
-        # rationale as similarity.srp_lsh_pairs) so the explode/distinct
-        # runs once
+        # dropped by the ContextCleaner once the result is GC'd) so the
+        # explode/distinct runs once
         shingles = shingles.localCheckpoint(eager=True)
     sets = shingles.groupBy("_id").agg(
         F.sort_array(F.collect_list("sh")).alias("_shs"),
@@ -206,10 +205,9 @@ def minhash_lsh_pairs(
     otherwise; measured 44 s -> ~3 s at 50k docs). The base is
     materialized once via eager localCheckpoint (checkpoint blocks are
     freed by the ContextCleaner when the result is GC'd, unlike persist()
-    which leaks for the session — same rationale as
-    similarity.srp_lsh_pairs); the band explode, the bucket-size cap, both
-    sides of the candidate self-join, and the exact verify all read those
-    blocks.
+    which leaks for the session); the band explode, the bucket-size cap,
+    both sides of the candidate self-join, and the exact verify all read
+    those blocks.
     """
     assert n_hashes % rows_per_band == 0
     n_bands = n_hashes // rows_per_band

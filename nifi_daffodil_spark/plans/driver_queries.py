@@ -881,33 +881,27 @@ WHERE doc_id NOT IN (SELECT node FROM drops)
 def q_dedup_semantic(spark, sf_dir):
     """SemDeDup-style EMBEDDING-space dedup (round-5): documents whose
     embeddings are semantically near-identical (cosine >= {SEMDEDUP_T})
-    collapse to one keeper per cluster. Candidates via banded SRP-LSH
-    (equality hash-join on (band, key) buckets — no cartesian), exact
-    cosine on candidates only, transitive closure + min-id keeper via the
-    same connected-components operator the text dedup family uses. This is
-    the scale shape of semantic dedup at 100 TB: LSH blocking keeps the
-    pair count sum-of-bucket-squares, and the closure is O(log n) rounds.
-    Returns every clustered vector: (vec_id, component=keeper, is_dup).
-    Oracle: identical SRP candidates (shared CTE chain), exact cosine
-    threshold, recursive-CTE closure."""
+    collapse to one keeper per cluster. Candidates via banded SRP-LSH, with
+    the threshold pushed into the per-bucket Arrow kernel (matmul screen +
+    exact-fold verify, each pair emitted once from its lowest colliding
+    band, so nothing quadratic is shuffled); transitive closure + min-id
+    keeper via the same connected-components operator the text dedup family
+    uses. This is the scale shape of semantic dedup at 100 TB: LSH blocking
+    keeps the pair count sum-of-bucket-squares, and the closure is O(log n)
+    rounds. Returns every clustered vector: (vec_id, component=keeper,
+    is_dup). Oracle: identical SRP candidates (shared CTE chain), exact
+    cosine threshold, recursive-CTE closure."""
     from nifi_daffodil_spark.operators.similarity import as_double_vecs, srp_lsh_pairs
     from nifi_daffodil_spark.operators.text_dedup import resolve_keepers
 
     e = _t(spark, sf_dir, "embeddings")
-    # min_cos pushes the threshold into the per-bucket pair generation
-    # (matmul screen + exact-fold verify) so nothing quadratic is shuffled;
-    # the filter below is then a no-op kept for the declared-query contract
-    pairs = (
-        srp_lsh_pairs(
-            as_double_vecs(e),
-            dim=64,
-            n_bands=N_SRP_BANDS,
-            rows_per_band=SRP_ROWS_PER_BAND,
-            min_cos=SEMDEDUP_T,
-        )
-        .filter(F.col("cos") >= SEMDEDUP_T)
-        .select("d1", "d2")
-    )
+    pairs = srp_lsh_pairs(
+        as_double_vecs(e),
+        dim=64,
+        n_bands=N_SRP_BANDS,
+        rows_per_band=SRP_ROWS_PER_BAND,
+        min_cos=SEMDEDUP_T,
+    ).select("d1", "d2")
     return resolve_keepers(pairs).select(
         F.col("doc_id").alias("vec_id"), "component", "is_dup"
     )
@@ -1141,13 +1135,13 @@ ORDER BY list_dot_product(a.u, b.u) DESC, v1, v2 LIMIT 20
 
 def q_neardup_cosine_lsh(spark, sf_dir):
     """SCALE path for embedding near-dup: banded sign-random-projection LSH
-    (b={N_SRP_BANDS}, r={SRP_ROWS_PER_BAND}) — candidates via equality
-    hash-join on (band, key) buckets, exact cosine only on candidates, NO
-    cartesian product in the plan (round-1 verdict: the brute-force entry is
-    O(n^2)). The hyperplane coefficients are md5-derived ±1 literals, so the
-    oracle replicates the exact same projections in SQL — equality is by
-    construction; recall vs brute force is asserted separately in
-    tests/test_training_ops.py."""
+    (b={N_SRP_BANDS}, r={SRP_ROWS_PER_BAND}) — one Arrow kernel per (band,
+    key) bucket emits each candidate pair once, from its lowest colliding
+    band, with its exact cosine; the plan has one exchange and no join or
+    cartesian product (the brute-force entry is O(n^2)). The hyperplane
+    coefficients are md5-derived ±1 literals, so the oracle replicates the
+    exact same projections in SQL — equality is by construction; recall vs
+    brute force is asserted separately in tests/test_training_ops.py."""
     from nifi_daffodil_spark.operators.similarity import as_double_vecs, srp_lsh_pairs
 
     e = _t(spark, sf_dir, "embeddings")

@@ -118,9 +118,13 @@ def test_dedup_corpus_simhash_method(spark):
     assert deduped.count() == corpus.count() - len(got)
 
 
-# the catalogue entries built on the shared text_dedup operators (simhash16,
-# word_shingles, jaccard_pairs, minhash_lsh_pairs, resolve_keepers)
-ORACLE_GATED = ("dedup_simhash", "dedup_ngram_jaccard", "dedup_components", "dedup_minhash_lsh")
+# the catalogue entries built on the shared dedup operators (text_dedup's
+# simhash16, word_shingles, jaccard_pairs, minhash_lsh_pairs and
+# resolve_keepers; similarity's srp_lsh_pairs)
+ORACLE_GATED = (
+    "dedup_simhash", "dedup_ngram_jaccard", "dedup_components", "dedup_minhash_lsh",
+    "neardup_cosine_lsh", "dedup_semantic",
+)
 
 
 @pytest.mark.parametrize(
@@ -137,9 +141,8 @@ def test_dedup_entries_match_duckdb_oracle(spark, sf_dir):
     from check_oracle import canon
 
     con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
+    for t in ("documents", "embeddings"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     qs, oracles = dq.queries(), dq.oracle_sql()
     for name in ORACLE_GATED:
         got = canon(qs[name](spark, sf_dir).toPandas())

@@ -53,14 +53,15 @@ def _vec_df(spark, n=80, dim=16, seed=7):
     return spark.createDataFrame(rows, "vec_id long, v array<double>"), m
 
 
-def test_brute_force_topk_both_paths_agree(spark):
-    """The whole-table Arrow scan and the IVF path probing every cell
-    (assign -> filter -> per-partition top-k) return the same ranking."""
+def test_brute_force_topk_both_paths_agree(spark, tmp_path):
+    """The whole-table Arrow scan and an IVF index probing every cell
+    (partition-pruned cell scan -> per-partition top-k) return the same
+    ranking."""
     df, m = _vec_df(spark)
     q = m[0].tolist()
-    cents = similarity.ivf_train_centroids(df, n_cells=4, seed=7)
+    idx = similarity.IvfIndex.build(df, str(tmp_path / "ivf"), n_cells=4, seed=7)
     a = [r["vec_id"] for r in similarity.brute_force_topk_arrow(df, q, 5).collect()]
-    b = [r["vec_id"] for r in similarity.ivf_topk(df, q, cents, k=5, nprobe=4).collect()]
+    b = [r["vec_id"] for r in idx.topk(q, k=5, nprobe=4).collect()]
     assert a[0] == 0 and a == b  # self is the best match; paths agree
 
 
@@ -127,18 +128,21 @@ def test_srp_lsh_pairs_recall_total_at_fixture(spark):
 
 
 def test_srp_lsh_plan_has_no_cartesian(spark):
-    """Scale guarantee for the graded entry: candidates come from an
-    equality hash-join on (band, key), never a cross join."""
+    """Scale guarantee for the graded entry: candidate pairs come out of
+    one Arrow kernel per (band, key) bucket — no join of any kind (so no
+    cross join), and no aggregate to de-duplicate pairs found in several
+    bands (each pair leaves only its lowest colliding band's bucket)."""
     from nifi_daffodil_spark.plans import driver_queries as dq
 
-    plan = (
+    df = (
         dq.q_neardup_cosine_lsh(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
     )
+    df.collect()  # the executed plan after AQE's final re-plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInArrow" in plan
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "HashAggregate" not in plan
 
 
 def test_jaccard_df_cap_bounds_candidates_but_keeps_exactness(spark):
@@ -204,17 +208,17 @@ def test_simhash64_near_pairs_banded_blocking(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_ivf_topk_recall_vs_brute_force(spark):
+def test_ivf_topk_recall_vs_brute_force(spark, tmp_path):
     """IVF coarse-quantizer ANN: deterministic sampled k-means centroids,
     cell assignment via Arrow matmul, probe-limited exact search. With
-    generous nprobe at this fixture the result equals brute force; with
-    nprobe=1 only a fraction of the data is scanned (the scale property)."""
+    nprobe = every cell the result equals brute force; with nprobe=1 only a
+    fraction of the data is scanned (the scale property)."""
     from pyspark.sql import functions as F
 
     from nifi_daffodil_spark.operators.similarity import (
+        IvfIndex,
         as_double_vecs,
         ivf_assign,
-        ivf_topk,
         ivf_train_centroids,
     )
 
@@ -222,19 +226,19 @@ def test_ivf_topk_recall_vs_brute_force(spark):
         spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     )
     q = e.filter(F.col("vec_id") == 0).first()["v"]
-    cents = ivf_train_centroids(e, n_cells=8, seed=7)
     base = e.filter(F.col("vec_id") != 0)
+    idx = IvfIndex.build(base, str(tmp_path / "ivf"), n_cells=8, seed=7)
     pdf = base.toPandas()
     m, ids = np.stack(pdf["v"].to_numpy()), pdf["vec_id"].to_numpy()
     cos = (m @ (np.asarray(q) / np.linalg.norm(q))) / np.linalg.norm(m, axis=1)
     exact = ids[np.lexsort((ids, -cos))[:10]].tolist()
-    got = [r["vec_id"] for r in ivf_topk(base, q, cents, k=10, nprobe=8).collect()]
+    got = [r["vec_id"] for r in idx.topk(q, k=10, nprobe=8).collect()]
     assert got == exact  # nprobe=all cells == exhaustive
     # determinism: same seed -> same centroids -> same assignment
-    cents2 = ivf_train_centroids(e, n_cells=8, seed=7)
-    assert (cents == cents2).all()
+    cents2 = ivf_train_centroids(base, n_cells=8, seed=7)
+    assert (idx.centroids == cents2).all()
     # the probe actually prunes: one cell holds a strict subset of the data
-    cells = ivf_assign(base, cents)
+    cells = ivf_assign(base, idx.centroids)
     one_cell = cells.filter(F.col("cell") == 0).count()
     assert 0 < one_cell < base.count()
 
@@ -348,15 +352,17 @@ def test_ivf_topk_batch_boundary_ties_deterministic(spark, tmp_path):
 
 def test_ivf_index_build_once_query_many(spark, tmp_path):
     """Persisted IVF index (round-2 verdict item #4): build writes centroids
-    + cell-partitioned vectors to parquet; load + query must equal the
-    per-call ivf_topk path (same quantizer seed => same cells), and the
-    batched multi-query path must equal per-query serving."""
+    + cell-partitioned vectors to parquet; load + query must equal an
+    in-memory assign -> probe-filter -> exact top-k over the same quantizer
+    (same seed => same cells), and the batched multi-query path must equal
+    per-query serving."""
     from pyspark.sql import functions as F
 
     from nifi_daffodil_spark.operators.similarity import (
         IvfIndex,
         as_double_vecs,
-        ivf_topk,
+        brute_force_topk_arrow,
+        ivf_assign,
         ivf_train_centroids,
     )
 
@@ -372,9 +378,13 @@ def test_ivf_index_build_once_query_many(spark, tmp_path):
 
     queries = [r["v"] for r in e.filter(F.col("vec_id") < 3).orderBy("vec_id").collect()]
     cents = ivf_train_centroids(e, n_cells=8, seed=7)
+    cells = ivf_assign(e, cents)
+    cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
     for q in queries:
+        probes = [int(c) for c in (cn @ np.asarray(q)).argsort()[::-1][:4]]
+        probed = cells.filter(F.col("cell").isin(probes)).select("vec_id", "v")
         per_call = [(r["vec_id"], round(r["cos"], 9))
-                    for r in ivf_topk(e, q, cents, k=5, nprobe=4).collect()]
+                    for r in brute_force_topk_arrow(probed, q, 5).collect()]
         served = [(r["vec_id"], round(r["cos"], 9))
                   for r in idx2.topk(q, k=5, nprobe=4).collect()]
         assert served == per_call
@@ -664,43 +674,58 @@ def test_asof_tolerance_handles_quoted_ts_column_name(spark):
     assert [(r["lid"], r["rid_r"]) for r in out] == [(1, 100)]
 
 
-def test_srp_thresholded_path_matches_catalyst_path(spark):
-    """The min_cos pushdown path (round-6 optimization: per-bucket numpy
-    screen + exact left-fold verify) must return EXACTLY the rows the
-    Catalyst path returns after an identical threshold filter — same pair
-    set, bit-identical cosines — on data that stresses the edges: exact
-    duplicates (cos == 1.0 tie plateaus), implanted near-dups straddling
-    the threshold, and random background. (Zero-norm vectors are excluded:
-    the Catalyst path raises ANSI DIVIDE_BY_ZERO on them, so they cannot
-    occur in graded data; the numpy path instead mirrors Spark's NaN
-    comparison semantics — NaN >= t is true — if they ever appear.)"""
+def test_srp_lsh_pairs_match_duckdb_candidates(spark):
+    """srp_lsh_pairs returns EXACTLY the DuckDB oracle's candidate pairs
+    (the shared `_srp_cand_cte` band join + DISTINCT) with bit-identical
+    list_dot_product cosines, each pair once — with no threshold and with
+    min_cos pushed into the bucket kernel — on data that stresses the
+    edges: exact duplicates (cos == 1.0 tie plateaus, colliding in every
+    band), implanted near-dups straddling the threshold, and random
+    background."""
+    import duckdb
+    import pandas as pd
+
+    from nifi_daffodil_spark.plans import driver_queries as dq
+
     rng = np.random.RandomState(11)
     vecs = list(rng.randn(120, 64))
     vecs[10] = vecs[0].copy()                      # exact dup (cos = 1.0)
     vecs[11] = vecs[0].copy()                      # second exact dup
     vecs[20] = vecs[5] + 0.05 * rng.randn(64)      # near dup
     vecs[30] = vecs[7] + 1.05 * rng.randn(64)      # borderline
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, v array<double>"
-    )
-    t = 0.45
-    old = (
-        similarity.srp_lsh_pairs(df, dim=64, n_bands=16, rows_per_band=2)
-        .filter(F.col("cos") >= t)
-        .collect()
-    )
-    new = (
-        similarity.srp_lsh_pairs(df, dim=64, n_bands=16, rows_per_band=2, min_cos=t)
-        .filter(F.col("cos") >= t)
-        .collect()
-    )
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    con = duckdb.connect()
+    con.register("embeddings", pd.DataFrame(rows, columns=["vec_id", "embedding"]))
 
-    def key(rows):
-        return sorted((r["d1"], r["d2"], repr(r["cos"])) for r in rows)
+    for min_cos in (None, 0.45):
+        got = [
+            (r["d1"], r["d2"], repr(r["cos"]))
+            for r in similarity.srp_lsh_pairs(
+                df, dim=64, n_bands=dq.N_SRP_BANDS,
+                rows_per_band=dq.SRP_ROWS_PER_BAND, min_cos=min_cos,
+            ).collect()
+        ]
+        where = "" if min_cos is None else f"WHERE cos >= {min_cos}"
+        want = con.execute(f"""
+WITH {dq._srp_cand_cte()},
+scored AS (
+  SELECT c.d1, c.d2, list_dot_product(x.u, y.u) AS cos
+  FROM cand c JOIN u x ON x.vec_id = c.d1 JOIN u y ON y.vec_id = c.d2)
+SELECT d1, d2, cos FROM scored {where}""").fetchall()
+        assert len({(d1, d2) for d1, d2, _ in got}) == len(got), min_cos
+        assert sorted(got) == sorted((d1, d2, repr(c)) for d1, d2, c in want), min_cos
+        # sanity: the implanted clusters actually produced pairs
+        assert (0, 10) in {(d1, d2) for d1, d2, _ in got}
 
-    assert key(new) == key(old)
-    # sanity: the implanted clusters actually produced pairs
-    assert ((0, 10) in {(r["d1"], r["d2"]) for r in new})
+
+def test_srp_lsh_pairs_rejects_signatures_wider_than_a_long(spark):
+    """The packed per-vector signature is one signed long: at most 63 sign
+    bits, checked when the plan is built."""
+    df, _ = _vec_df(spark, n=4, dim=4)
+    with pytest.raises(ValueError, match="63"):
+        similarity.srp_lsh_pairs(df, dim=4, n_bands=32, rows_per_band=2)
+    similarity.srp_lsh_pairs(df, dim=4, n_bands=21, rows_per_band=3)
 
 
 def test_semantic_dedup_clusters_identical_vectors(spark):
